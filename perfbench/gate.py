@@ -5,17 +5,18 @@ output differs from its oracle, is marked failed and counts in
 ``failed``/``attempted`` of the result line; nothing is dropped.
 
 Query ops compare row multisets against ``__spark_entry__.oracle_sql()``
-on DuckDB over the same generated parquet tables: columns sorted by
-name, order-insensitive, values compared by ``repr`` after decimals
-become floats (the registry's parity rule).
+on DuckDB over the same generated parquet tables, with the registry's
+parity rule from ``scripts/check_parity.py``: columns sorted by name,
+order-insensitive, values compared by ``repr`` after decimals become
+floats.
 """
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
-from decimal import Decimal
 from typing import Any, Callable
+
+from scripts.check_parity import _key
 
 
 @dataclass
@@ -36,27 +37,19 @@ class Op:
         return self.error is not None or self.problem is not None
 
 
-def _norm(v):
-    if isinstance(v, Decimal):
-        return float(v)
-    if isinstance(v, float) and math.isnan(v):
-        return "NaN"
-    return v
-
-
 def row_multiset(cols: list[str], rows: list[tuple]) -> tuple[list[str], list[tuple]]:
-    """Columns sorted by name and rows as sorted ``repr`` tuples."""
+    """Columns sorted by name and rows as sorted parity keys."""
     order = sorted(range(len(cols)), key=lambda i: cols[i])
-    keyed = sorted(tuple(repr(_norm(r[i])) for i in order) for r in rows)
-    return [cols[i] for i in order], keyed
+    return [cols[i] for i in order], sorted(_key([r[i] for i in order]) for r in rows)
 
 
 def compare_rows(got: tuple[list[str], list[tuple]],
                  want: tuple[list[str], list[tuple]]) -> str | None:
-    """None when both (columns, rows) results are the same multiset,
-    else a one-line description of the first difference."""
+    """None when the (columns, rows) result ``got`` is the multiset
+    ``want`` (an oracle's answer through ``row_multiset``, computed once
+    per query), else a one-line description of the first difference."""
     g_cols, g_rows = row_multiset(*got)
-    w_cols, w_rows = row_multiset(*want)
+    w_cols, w_rows = want
     if g_cols != w_cols:
         return f"columns differ: got {g_cols} want {w_cols}"
     if len(g_rows) != len(w_rows):

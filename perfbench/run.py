@@ -7,10 +7,9 @@ inputs from ``--seed``, starts the engine's session on
 ``local[<cores>]``, warms up with one untimed pass over the op mix, then
 issues rounds from a single client thread in a closed loop (the next
 round starts when the previous one returned) in whole passes over the
-mix until the rounds have taken ``--seconds`` (and for at least the
-workload's minimum number of passes). Every op's output is
-checked against an independent oracle right after its round, off the
-clock.
+mix until the rounds have taken ``--seconds`` and the workload's fixed
+number of passes is done. Every op's output is checked against an
+independent oracle right after its round, off the clock.
 
 ``--trace 0`` reports the end-to-end metrics; ``--trace 1`` runs the
 timed loop once untraced and once with spans around every call into the
@@ -33,6 +32,7 @@ import tempfile  # noqa: E402
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+sys.path.insert(1, ROOT)  # the program, and scripts/ for the parity rule
 
 #: layers whose self time the traced run reports: the program's
 #: modules, plus the forcing action, the registry glue and the
@@ -74,7 +74,6 @@ def contain(work: str) -> None:
         "--conf spark.ui.showConsoleProgress=false",
         "pyspark-shell",
     ])
-    sys.path.insert(0, ROOT)
 
 
 def run_pass(wl, ctx, mix, ops: list) -> float:
@@ -97,20 +96,27 @@ def run_pass(wl, ctx, mix, ops: list) -> float:
 
 def timed_loop(wl, ctx, seconds: float):
     """Closed loop over whole passes of the mix until ``seconds`` of
-    round time and at least ``wl.MIN_PASSES`` passes. Passes are never
-    cut short, so every run measures the same multiset of ops; only
-    their order depends on the seed."""
+    round time and at least ``wl.PASSES`` passes.
+
+    Returns (ops, busy, measured): every op, the round time, and the ops
+    of the first ``wl.PASSES`` passes, which the latency metrics are
+    taken over. That is the same multiset of ops in every run, whatever
+    the host's speed, so their percentiles are too; only the order
+    depends on the seed."""
     ops: list = []
     busy, passes = 0.0, 0
-    while busy < seconds or passes < wl.MIN_PASSES:
+    while busy < seconds or passes < wl.PASSES:
         busy += run_pass(wl, ctx, wl.mix(), ops)
         passes += 1
-    return ops, busy
+        if passes == wl.PASSES:
+            measured = list(ops)
+    return ops, busy, measured
 
 
 def tail(latencies: list[float]) -> tuple[float, float, int]:
     """(value, percentile, n): the op latency at the highest percentile
-    with at least ten samples beyond it (the maximum when n < 11)."""
+    with at least ten samples beyond it (the maximum when n < 11). The
+    workload's fixed op count fixes the percentile."""
     xs = sorted(latencies)
     n = len(xs)
     idx = n - 11 if n >= 11 else n - 1
@@ -204,14 +210,14 @@ def run(args, work: str) -> dict:
         warmup_s = time.perf_counter() - t
         setup_s = time.perf_counter() - T0
 
-        ops, wall = timed_loop(wl, ctx, args.seconds)
+        ops, wall, measured = timed_loop(wl, ctx, args.seconds)
         traced = []
         if args.trace:
             tracer = Tracer()
             tracer.install()
             try:
-                traced, _ = timed_loop(wl, workloads.Ctx(spark, tracer),
-                                       args.seconds)
+                traced, _, _ = timed_loop(wl, workloads.Ctx(spark, tracer),
+                                          args.seconds)
             finally:
                 tracer.uninstall()
             layer = layer_metrics(traced, [m["name"] for m in spec["per_layer"]])
@@ -236,11 +242,11 @@ def run(args, work: str) -> dict:
         stop_spark(spark)
 
     attempted, failed = gate.summary(every)
-    lat = [op.latency_s for op in ops]
+    lat = [op.latency_s for op in measured]
     p50 = statistics.median(lat)
     tail_s, tail_pct, n = tail(lat)
     print(f"workload={args.workload} seed={args.seed} setup_s={setup_s:.3f} "
-          f"ops={n} timed_s={wall:.3f} op_p50_s={p50:.4f} "
+          f"ops={len(ops)} timed_s={wall:.3f} op_p50_s={p50:.4f} "
           f"op_tail_s={tail_s:.4f} (p{tail_pct:.0f} of {n} ops)")
     print(f"failed_frac={failed / attempted:.4f} ({failed}/{attempted} ops, "
           f"warm-up and traced passes included)")
@@ -258,7 +264,7 @@ def run(args, work: str) -> dict:
                    for m in spec["per_layer"]}
     else:
         e2e = {"setup_s": setup_s, "op_p50_s": p50, "op_tail_s": tail_s,
-               "ops_per_s": n / wall,
+               "ops_per_s": len(ops) / wall,
                "rows_per_s": sum(op.rows_in for op in ops) / wall}
         metrics = {m["name"]: {"value": e2e[m["name"]], "unit": m["unit"]}
                    for m in spec["end_to_end"]}

@@ -21,13 +21,13 @@ import workloads  # noqa: E402
 
 def _pricing_workload(tmp_path):
     import __spark_entry__ as entry
+    from scripts.check_parity import run_duckdb
 
     wl = workloads.make("analytic_queries", str(tmp_path), seed=3)
     wl.sf = 0.001
     wl.generate()
     wl.oracles = entry.oracle_sql()
-    cur = wl._duck().execute(wl.oracles["pricing_summary"])
-    return wl, [d[0] for d in cur.description], cur.fetchall()
+    return wl, *run_duckdb(wl.oracles["pricing_summary"], wl.sf_dir)
 
 
 def test_wrong_query_result_counts_in_failed_frac(tmp_path):
@@ -69,6 +69,7 @@ def test_compare_rows_sorts_columns_and_normalises_decimals():
     from decimal import Decimal
 
     got = (["b", "a"], [(Decimal("1.50"), "x")])
-    want = (["a", "b"], [("x", 1.5)])
+    want = gate.row_multiset(["a", "b"], [("x", 1.5)])
     assert gate.compare_rows(got, want) is None
-    assert gate.compare_rows(got, (["a", "c"], [("x", 1.5)])).startswith("columns differ")
+    other = gate.row_multiset(["a", "c"], [("x", 1.5)])
+    assert gate.compare_rows(got, other).startswith("columns differ")

@@ -1,4 +1,4 @@
-"""The four workloads: inputs, one pass of the op mix, and the oracle.
+"""The three workloads: inputs, one pass of the op mix, and the oracle.
 
 Every workload has the same life cycle, driven by ``run.py``:
 ``generate()`` writes the seeded inputs (no Spark), ``prepare(spark)``
@@ -6,7 +6,8 @@ does the Spark-side set-up (published master, standing indexes),
 ``mix()`` lists one pass of rounds in seeded order (``warm_mix()``, where
 present, the warm-up pass), ``run_round`` executes one round and
 returns its ops, and ``check(op)`` compares one op's output with the
-oracle, off the clock.
+oracle, off the clock. ``PASSES`` is the fixed number of timed passes
+whose ops the latency metrics are taken over.
 
 A round is what the client issues and waits for; an op is what a user
 waits for. For the query workloads they coincide (one query answered).
@@ -31,10 +32,8 @@ import pyarrow.compute  # noqa: F401 - pa.compute
 import pyarrow.parquet as pq
 
 import datagen
-from gate import Op, compare_rows
-
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
+from gate import Op, compare_rows, row_multiset
+from scripts.check_parity import run_duckdb
 
 _PYTHON_NODE = re.compile(
     r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|"
@@ -103,32 +102,30 @@ class Ctx:
         return {"spark.jobs_per_op": len(jobs), "spark.tasks_per_op": tasks}
 
 
-# --- analytic_queries / llm_curation -------------------------------------
+# --- analytic_queries ------------------------------------------------------
 
 class QueryWorkload:
     """A seeded sequence of registry queries over generated tables.
 
-    Each pass runs every query of ``queries`` once in a seeded order;
-    the forcing action delivers the answer to the client as Arrow
-    (``toArrow()``), whose rows the gate compares with the query's
-    DuckDB oracle (``oracle_sql()[name]``)."""
+    Each pass runs every query of ``queries`` once in a seeded order, so
+    the timed passes repeat every query; the forcing action delivers the
+    answer to the client as Arrow (``toArrow()``), whose rows the gate
+    compares with the query's DuckDB oracle (``oracle_sql()[name]``)."""
 
-    #: two passes even on a slow host: the tail then has ten ops beyond it
-    MIN_PASSES = 2
+    name = "analytic_queries"
+    #: 3 passes of 10 queries: the tail (ten ops beyond it) is then p67
+    PASSES = 3
 
-    def __init__(self, name: str, work: str, seed: int, queries: dict[str, str],
-                 sf: float, docs: int, vectors: int):
-        self.name, self.work, self.seed = name, work, seed
-        self.queries = queries  # op name -> registry query it runs
-        self.sf, self.docs, self.vectors = sf, docs, vectors
+    def __init__(self, work: str, seed: int, queries: list[str], sf: float):
+        self.work, self.seed = work, seed
+        self.queries, self.sf = queries, sf
         self.sf_dir = os.path.join(work, "tables")
         self.rng = np.random.default_rng(seed)
         self.rows_in: dict[str, int] = {}
         self._oracle: dict[str, tuple] = {}
 
     def generate(self) -> None:
-        self.table_rows = datagen.star_schema(
-            self.sf_dir, self.seed, self.sf, self.docs, self.vectors)
+        self.table_rows = datagen.star_schema(self.sf_dir, self.seed, self.sf)
         self.input_bytes = dir_bytes(self.sf_dir)
 
     def prepare(self, spark) -> None:
@@ -147,14 +144,13 @@ class QueryWorkload:
         return sum(self.table_rows.get(t, 0) for t in tables)
 
     def run_round(self, name: str, ctx: Ctx) -> list[Op]:
-        query = self.queries[name]
         group = ctx.begin_op(name)
         op = Op(self.name, name, 0.0)
         t0 = time.perf_counter()
         try:
             with ctx.span("bench.op"):
-                with ctx.span(f"registry.{query}"):
-                    df = self.registry[query](ctx.spark, self.sf_dir)
+                with ctx.span(f"registry.{name}"):
+                    df = self.registry[name](ctx.spark, self.sf_dir)
                 t1 = time.perf_counter()
                 with ctx.span("spark.to_arrow"):
                     table = df.toArrow()
@@ -177,20 +173,11 @@ class QueryWorkload:
             op.layer.update(ctx.spark_counts(group))
         return [op]
 
-    def _duck(self) -> duckdb.DuckDBPyConnection:
-        con = duckdb.connect()
-        con.execute(f"SET temp_directory='{os.path.join(self.work, 'duck')}'")
-        for t in TABLES:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
-                        f"'{self.sf_dir}/{t}.parquet'")
-        return con
-
     def check(self, op: Op) -> str | None:
-        query = self.queries[op.name]
-        if query not in self._oracle:
-            cur = self._duck().execute(self.oracles[query])
-            self._oracle[query] = ([d[0] for d in cur.description], cur.fetchall())
-        return compare_rows(op.output, self._oracle[query])
+        if op.name not in self._oracle:
+            self._oracle[op.name] = row_multiset(
+                *run_duckdb(self.oracles[op.name], self.sf_dir))
+        return compare_rows(op.output, self._oracle[op.name])
 
 
 # --- invoice_ingest --------------------------------------------------------
@@ -202,7 +189,7 @@ class IngestWorkload:
     whole inbox; the warm-up round takes its first file alone."""
 
     name = "invoice_ingest"
-    MIN_PASSES = 1  # one round already outlasts --seconds
+    PASSES = 1  # one two-file round already outlasts --seconds
 
     def __init__(self, work: str, seed: int, sf: float, n_files: int,
                  rows_per_file: int, master_rows: int):
@@ -218,7 +205,7 @@ class IngestWorkload:
 
     def generate(self) -> None:
         tables = os.path.join(self.work, "tables")
-        datagen.star_schema(tables, self.seed, self.sf, 10, 10)
+        datagen.star_schema(tables, self.seed, self.sf)
         self.inbox = datagen.invoice_inbox(
             os.path.join(tables, "lineitem.parquet"), self.inbox_dir,
             self.seed, self.n_files, self.rows_per_file, self.master_rows)
@@ -467,7 +454,7 @@ class StreamWorkload:
 
     name = "event_stream"
     WARM_FILES = 3
-    MIN_PASSES = 2  # two drains even on a slow host, as for the queries
+    PASSES = 2  # 26 micro-batches: the tail (ten beyond it) is p62
 
     def __init__(self, work: str, seed: int, n_events: int, n_files: int):
         self.work, self.seed = work, seed
@@ -557,7 +544,8 @@ SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS window_start_us,
        event_type, count(*) AS n,
        CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
 FROM read_parquet('{events_dir}/*.parquet') GROUP BY ALL""")
-            self._truth[events_dir] = ([d[0] for d in cur.description], cur.fetchall())
+            self._truth[events_dir] = row_multiset(
+                [d[0] for d in cur.description], cur.fetchall())
         return self._truth[events_dir]
 
     def check(self, op: Op) -> str | None:
@@ -582,19 +570,11 @@ FROM read_parquet('{events_dir}/*.parquet') GROUP BY ALL""")
 def make(name: str, work: str, seed: int):
     """The workload called ``name``, sized for one benchmark run."""
     if name == "analytic_queries":
-        qs = ["pricing_summary", "shipping_priority", "top_customers",
-              "rollup_sales", "cube_sales", "window_rank",
-              "flagship_consolidation", "reconciliation", "upsert_full_status",
-              "validation_errors"]
-        return QueryWorkload(name, work, seed, {q: q for q in qs},
-                             sf=0.01, docs=500, vectors=500)
-    if name == "llm_curation":
-        qs = {"text_quality": "text_quality", "lang_id_ngram": "lang_id_ngram",
-              "bm25_search": "bm25_search", "phash_dedup": "phash_dedup",
-              "minhash_lsh_pairs": "minhash_lsh_pairs",
-              "semantic_dedup": "semantic_dedup_recall",
-              "simhash_docs": "simhash_docs"}
-        return QueryWorkload(name, work, seed, qs, sf=0.001, docs=500, vectors=500)
+        return QueryWorkload(work, seed, [
+            "pricing_summary", "shipping_priority", "top_customers",
+            "rollup_sales", "cube_sales", "window_rank",
+            "flagship_consolidation", "reconciliation", "upsert_full_status",
+            "validation_errors"], sf=0.01)
     if name == "invoice_ingest":
         return IngestWorkload(work, seed, sf=0.01, n_files=2, rows_per_file=200,
                               master_rows=5_000)
@@ -603,4 +583,4 @@ def make(name: str, work: str, seed: int):
     raise KeyError(name)
 
 
-WORKLOADS = ("invoice_ingest", "analytic_queries", "llm_curation", "event_stream")
+WORKLOADS = ("invoice_ingest", "analytic_queries", "event_stream")
