@@ -1,15 +1,14 @@
 """Seeded input generation for every workload.
 
-Everything the program reads is made here from ``--seed``: the
-TPC-H-ish star schema plus ``events``/``documents``/``embeddings`` in
-the shape and value domains of the engine's parquet contract
-(``scripts/expected_schemas.json``), the XLSX invoice inbox of the
-ingest workload together with its ground truth, and the event files of
-the stream workload. The same seed gives the same inputs.
+Everything the program reads is made here from ``--seed``: the XLSX
+invoice inbox of the ingest workload (from a TPC-H-shaped ``lineitem``)
+together with its ground truth, and the event files of the stream
+workload in the shape of the engine's ``events`` table
+(``scripts/expected_schemas.json``). The same seed gives the same
+inputs.
 
-Value domains follow the determinism rules the registry queries rely
-on: money doubles carry two decimals, rates one or two, timestamps are
-whole microseconds, so Spark and DuckDB agree exactly.
+Money carries two decimals and timestamps are whole microseconds, so
+Spark and DuckDB agree exactly.
 """
 
 from __future__ import annotations
@@ -22,20 +21,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
-PART_ADJ = ["blue", "hot", "small", "old", "red", "new", "large", "dark"]
-PART_NOUN = ["bolt", "gear", "anvil", "ring", "nut", "screw", "spring", "valve"]
-PART_TYPES = ["ECONOMY", "LARGE", "MEDIUM", "PROMO", "SMALL", "STANDARD"]
-PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
-LANGS = ["en", "de", "es", "fr", "zh"]
-LANG_P = [0.4, 0.15, 0.15, 0.15, 0.15]
-VOCAB = (
-    "a agg batch big column customer data dup fast filter group hash join "
-    "key line merge order part query row scan slow small sort spark stream "
-    "table the value vector window"
-).split()
 
 _DAY_US = 86_400_000_000
 _EPOCH_1995 = 788_918_400_000_000  # 1995-01-01 in microseconds
@@ -46,105 +32,24 @@ def _ts(us: np.ndarray) -> pa.Array:
     return pa.array(us.astype("int64"), type=pa.int64()).cast(pa.timestamp("us"))
 
 
-def _cents(rng: np.random.Generator, lo: float, hi: float, n: int) -> np.ndarray:
-    return rng.integers(int(lo * 100), int(hi * 100) + 1, n) / 100.0
-
-
 def _write(path: str, table: pa.Table) -> int:
     pq.write_table(table, path)
     return os.path.getsize(path)
 
 
-#: rows of documents and embeddings: no workload reads them, but the
-#: query oracle defines a view over every table
-DOCS = VECTORS = 100
-
-
-def star_schema(out_dir: str, seed: int, sf: float) -> dict[str, int]:
-    """Write the ten tables as ``<out_dir>/<name>.parquet``; returns
-    row counts by table."""
-    os.makedirs(out_dir, exist_ok=True)
+def lineitem(seed: int, sf: float) -> pa.Table:
+    """The columns of a seeded TPC-H-shaped ``lineitem`` of
+    ``6,000,000 × sf`` rows that the invoice view reads."""
     rng = np.random.default_rng(seed)
-    n_cust, n_supp = int(150_000 * sf), int(10_000 * sf)
-    n_part, n_ord = int(200_000 * sf), int(1_500_000 * sf)
-    n_line, n_ev = int(6_000_000 * sf), int(1_000_000 * sf)
-    tables: dict[str, pa.Table] = {}
-
-    tables["region"] = pa.table({
-        "r_regionkey": pa.array(range(5), pa.int32()),
-        "r_name": REGIONS,
+    n_supp, n_ord, n = int(10_000 * sf), int(1_500_000 * sf), int(6_000_000 * sf)
+    return pa.table({
+        "l_orderkey": rng.integers(0, n_ord, n).astype("int64"),
+        "l_linenumber": rng.integers(1, 8, n).astype("int32"),
+        "l_suppkey": rng.integers(0, n_supp, n).astype("int64"),
+        "l_extendedprice": rng.integers(90_000, 10_500_001, n) / 100.0,
+        "l_tax": rng.integers(0, 9, n) / 100.0,
+        "l_shipdate": _ts(_EPOCH_1995 + rng.integers(1, 2500, n) * _DAY_US),
     })
-    tables["nation"] = pa.table({
-        "n_nationkey": pa.array(range(25), pa.int32()),
-        "n_name": [f"NATION_{i}" for i in range(25)],
-        "n_regionkey": pa.array([i % 5 for i in range(25)], pa.int32()),
-    })
-    tables["customer"] = pa.table({
-        "c_custkey": np.arange(n_cust, dtype="int64"),
-        "c_name": [f"Customer#{i:09d}" for i in range(n_cust)],
-        "c_nationkey": rng.integers(0, 25, n_cust).astype("int32"),
-        "c_acctbal": _cents(rng, -999.99, 9999.99, n_cust),
-        "c_mktsegment": rng.choice(SEGMENTS, n_cust),
-    })
-    tables["supplier"] = pa.table({
-        "s_suppkey": np.arange(n_supp, dtype="int64"),
-        "s_name": [f"Supplier#{i:09d}" for i in range(n_supp)],
-        "s_nationkey": rng.integers(0, 25, n_supp).astype("int32"),
-        "s_acctbal": _cents(rng, -999.99, 9999.99, n_supp),
-    })
-    pk = np.arange(n_part, dtype="int64")
-    tables["part"] = pa.table({
-        "p_partkey": pk,
-        "p_name": [f"{PART_ADJ[a]} {PART_NOUN[b]}" for a, b in
-                   zip(rng.integers(0, 8, n_part), rng.integers(0, 8, n_part))],
-        "p_brand": [f"Brand#{b}" for b in rng.integers(1, 26, n_part)],
-        "p_type": rng.choice(PART_TYPES, n_part),
-        "p_size": rng.integers(1, 51, n_part).astype("int32"),
-        "p_retailprice": (9000 + pk % 1000) / 10.0,
-    })
-    tables["orders"] = pa.table({
-        "o_orderkey": np.arange(n_ord, dtype="int64"),
-        "o_custkey": rng.integers(0, n_cust, n_ord).astype("int64"),
-        "o_orderstatus": rng.choice(["F", "O", "P"], n_ord),
-        "o_totalprice": _cents(rng, 1000.0, 500_000.0, n_ord),
-        "o_orderdate": _ts(_EPOCH_1995 + rng.integers(0, 2404, n_ord) * _DAY_US),
-        "o_orderpriority": rng.choice(PRIORITIES, n_ord),
-    })
-    tables["lineitem"] = pa.table({
-        "l_orderkey": rng.integers(0, n_ord, n_line).astype("int64"),
-        "l_partkey": rng.integers(0, n_part, n_line).astype("int64"),
-        "l_suppkey": rng.integers(0, n_supp, n_line).astype("int64"),
-        "l_linenumber": rng.integers(1, 8, n_line).astype("int32"),
-        "l_quantity": rng.integers(1, 51, n_line).astype("float64"),
-        "l_extendedprice": _cents(rng, 900.0, 105_000.0, n_line),
-        "l_discount": rng.integers(0, 11, n_line) / 100.0,
-        "l_tax": rng.integers(0, 9, n_line) / 100.0,
-        "l_returnflag": rng.choice(["A", "N", "R"], n_line),
-        "l_linestatus": rng.choice(["F", "O"], n_line),
-        "l_shipdate": _ts(_EPOCH_1995 + rng.integers(1, 2500, n_line) * _DAY_US),
-    })
-    tables["events"] = event_table(rng, n_ev, max(15, n_ev // 67))
-
-    docs, vectors = DOCS, VECTORS
-    words = rng.integers(10, 101, docs)
-    texts = [" ".join(rng.choice(VOCAB, w)) for w in words]
-    tables["documents"] = pa.table({
-        "doc_id": np.arange(docs, dtype="int64"),
-        "text": texts,
-        "lang": rng.choice(LANGS, docs, p=LANG_P),
-        "source": [f"src{s}" for s in rng.integers(0, 20, docs)],
-        "n_chars": np.array([len(t) for t in texts], dtype="int64"),
-    })
-    vec = rng.standard_normal((vectors, 64)).astype("float32")
-    vec /= np.linalg.norm(vec, axis=1, keepdims=True)
-    tables["embeddings"] = pa.table({
-        "vec_id": np.arange(vectors, dtype="int64"),
-        "embedding": pa.array(list(vec), type=pa.list_(pa.float32())),
-        "label": rng.integers(0, 10, vectors).astype("int32"),
-    })
-    for name, table in tables.items():
-        _write(os.path.join(out_dir, f"{name}.parquet"), table)
-    return {name: t.num_rows for name, t in tables.items()}
 
 
 def event_table(rng: np.random.Generator, n: int, users: int) -> pa.Table:
@@ -222,13 +127,13 @@ def _date(day_us: int, style: int) -> str:
             d.strftime("%d-%m-%Y"))[style]
 
 
-def invoice_inbox(lineitem_path: str, out_dir: str, seed: int,
+def invoice_inbox(li: pa.Table, out_dir: str, seed: int,
                   n_files: int, rows_per_file: int,
                   master_rows: int) -> Inbox:
     """Write ``n_files`` simple-layout XLSX invoice sheets and return
     the master to publish with the per-row ground truth.
 
-    The master is the invoice view of ``master_rows`` seeded lineitem
+    The master is the invoice view of ``master_rows`` seeded ``li``
     rows (PK ``(l_orderkey, l_linenumber)``, first wins). Inbox rows
     come from the remaining lineitem rows; a share re-sends a master
     invoice unchanged, a share repeats a PK earlier in the same file,
@@ -237,9 +142,6 @@ def invoice_inbox(lineitem_path: str, out_dir: str, seed: int,
     from smartbots_etl_facturas_spark.sources.xlsx import write_xlsx
 
     os.makedirs(out_dir, exist_ok=True)
-    li = pq.read_table(lineitem_path, columns=[
-        "l_orderkey", "l_linenumber", "l_suppkey", "l_extendedprice",
-        "l_tax", "l_shipdate"])
     ship_us = li.column("l_shipdate").cast(pa.int64()).to_pylist()
     li = li.to_pydict()
     rng = np.random.default_rng(seed + 11)

@@ -4,11 +4,11 @@ The gate runs after the timed section. An op that raised, or whose
 output differs from its oracle, is marked failed and counts in
 ``failed``/``attempted`` of the result line; nothing is dropped.
 
-Query ops compare row multisets against ``__spark_entry__.oracle_sql()``
-on DuckDB over the same generated parquet tables, with the registry's
-parity rule from ``scripts/check_parity.py``: columns sorted by name,
-order-insensitive, values compared by ``repr`` after decimals become
-floats.
+Row results (the stream's committed output) compare as row multisets
+against a DuckDB oracle over the same generated files, with the
+registry's parity rule from ``scripts/check_parity.py``: columns sorted
+by name, order-insensitive, values compared by ``repr`` after decimals
+become floats.
 """
 
 from __future__ import annotations
@@ -47,7 +47,7 @@ def compare_rows(got: tuple[list[str], list[tuple]],
                  want: tuple[list[str], list[tuple]]) -> str | None:
     """None when the (columns, rows) result ``got`` is the multiset
     ``want`` (an oracle's answer through ``row_multiset``, computed once
-    per query), else a one-line description of the first difference."""
+    per input), else a one-line description of the first difference."""
     g_cols, g_rows = row_multiset(*got)
     w_cols, w_rows = want
     if g_cols != w_cols:

@@ -35,10 +35,9 @@ ROOT = os.path.dirname(HERE)
 sys.path.insert(1, ROOT)  # the program, and scripts/ for the parity rule
 
 #: layers whose self time the traced run reports: the program's
-#: modules, plus the forcing action, the registry glue and the
-#: benchmark's own code around them
+#: modules, plus the benchmark's own code around them
 SELF_LAYERS = ("session", "sources", "functions", "operators", "plans",
-               "sinks", "streaming", "spark", "registry", "bench")
+               "sinks", "streaming", "bench")
 
 #: per-op layer values are summarised by their median, except these
 LAST_OR_MAX = {"plans.consolidation.plan_chars": max,
@@ -206,7 +205,7 @@ def run(args, work: str) -> dict:
         ctx = workloads.Ctx(spark)
         t = time.perf_counter()
         warm: list = []
-        run_pass(wl, ctx, getattr(wl, "warm_mix", wl.mix)(), warm)
+        run_pass(wl, ctx, wl.warm_mix(), warm)
         warmup_s = time.perf_counter() - t
         setup_s = time.perf_counter() - T0
 

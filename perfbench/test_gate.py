@@ -2,8 +2,8 @@
 
     python3 -m pytest perfbench/test_gate.py -q
 
-Runs without a Spark session: the oracle side is DuckDB over tables
-generated exactly as a benchmark run generates them.
+Runs without a Spark session: the oracle side is DuckDB over event
+files generated exactly as a benchmark run generates them.
 """
 
 from __future__ import annotations
@@ -19,28 +19,23 @@ import gate  # noqa: E402
 import workloads  # noqa: E402
 
 
-def _pricing_workload(tmp_path):
-    import __spark_entry__ as entry
-    from scripts.check_parity import run_duckdb
-
-    wl = workloads.make("analytic_queries", str(tmp_path), seed=3)
-    wl.sf = 0.001
+def test_wrong_stream_output_counts_in_failed_frac(tmp_path):
+    wl = workloads.make("event_stream", str(tmp_path), seed=3)
+    wl.n_events, wl.n_files = 2_000, 3
     wl.generate()
-    wl.oracles = entry.oracle_sql()
-    return wl, *run_duckdb(wl.oracles["pricing_summary"], wl.sf_dir)
-
-
-def test_wrong_query_result_counts_in_failed_frac(tmp_path):
-    wl, cols, rows = _pricing_workload(tmp_path)
-    wrong = [tuple(v + 1 if isinstance(v, int) and not isinstance(v, bool) else v
-                   for v in rows[0]), *rows[1:]]
-    ops = [
-        gate.Op("analytic_queries", "pricing_summary", 0.1, output=(cols, rows)),
-        gate.Op("analytic_queries", "pricing_summary", 0.1, output=(cols, wrong)),
-        gate.Op("analytic_queries", "pricing_summary", 0.1,
-                output=(cols, list(reversed(rows)))),  # order is not checked
-        gate.Op("analytic_queries", "pricing_summary", 0.1, output=(cols, rows[1:])),
-    ]
+    cols, rows = workloads.stream_oracle(wl.events_dir)
+    n = cols.index("n")
+    committed = {
+        "right": (cols, rows),
+        "off_by_one": (cols, [(*rows[0][:n], rows[0][n] + 1, *rows[0][n + 1:]),
+                              *rows[1:]]),
+        "reordered": (cols, list(reversed(rows))),  # order is not checked
+        "row_missing": (cols, rows[1:]),
+    }
+    wl.committed = committed.__getitem__
+    wl.outputs = {k: (k, wl.events_dir) for k in committed}
+    ops = [gate.Op("event_stream", f"batch-{i}", 0.1, output=k)
+           for i, k in enumerate(committed)]
     gate.apply(ops, wl.check)
     assert [op.failed for op in ops] == [False, True, False, True]
     assert "value mismatch" in ops[1].problem

@@ -8,8 +8,8 @@ program itself is not edited. Spans are written out once, at the end.
 
 A span's name is its module path below the package plus the function
 (``plans.consolidation.consolidate``); its layer is the first part.
-The benchmark adds its own spans for the forcing action (``spark``)
-and the op itself (``bench``).
+The benchmark adds its own spans (``bench``) for the op itself and the
+stream's sink.
 """
 
 from __future__ import annotations
@@ -19,7 +19,6 @@ import importlib
 import inspect
 import json
 import pkgutil
-import sys
 import threading
 import time
 from contextlib import contextmanager
@@ -108,10 +107,8 @@ class Tracer:
                     for m, fn in list(vars(val).items()):
                         if not m.startswith("_") and inspect.isfunction(fn):
                             self._set(val, m, self._wrap(f"{short}.{attr}.{m}", fn))
-        # rebind ``from module import name`` copies, in the package and
-        # in the query registry
-        registry = sys.modules.get("__spark_entry__")
-        for mod in [*modules, *([registry] if registry else [])]:
+        # rebind ``from module import name`` copies in the package
+        for mod in modules:
             for attr, val in list(vars(mod).items()):
                 w = originals.get(id(val))
                 if w is not None and val is not w:

@@ -1,24 +1,22 @@
-"""The three workloads: inputs, one pass of the op mix, and the oracle.
+"""The two workloads: inputs, one pass of the op mix, and the oracle.
 
 Every workload has the same life cycle, driven by ``run.py``:
 ``generate()`` writes the seeded inputs (no Spark), ``prepare(spark)``
-does the Spark-side set-up (published master, standing indexes),
-``mix()`` lists one pass of rounds in seeded order (``warm_mix()``, where
-present, the warm-up pass), ``run_round`` executes one round and
-returns its ops, and ``check(op)`` compares one op's output with the
-oracle, off the clock. ``PASSES`` is the fixed number of timed passes
-whose ops the latency metrics are taken over.
+does the Spark-side set-up (ingest: the published master), ``mix()``
+lists one pass of rounds and ``warm_mix()`` the shorter warm-up pass,
+``run_round`` executes one round and returns its ops, and ``check(op)``
+compares one op's output with the oracle, off the clock. ``PASSES`` is
+the fixed number of timed passes whose ops the latency metrics are
+taken over.
 
 A round is what the client issues and waits for; an op is what a user
-waits for. For the query workloads they coincide (one query answered).
-For ``invoice_ingest`` a round is one cron run over the inbox and each
-file committed is an op; for ``event_stream`` a round is one
+waits for. For ``invoice_ingest`` a round is one cron run over the inbox
+and each file committed is an op; for ``event_stream`` a round is one
 availableNow drain and each micro-batch committed is an op.
 """
 
 from __future__ import annotations
 
-import datetime
 import os
 import re
 import shutil
@@ -26,14 +24,12 @@ import time
 from contextlib import nullcontext
 
 import duckdb
-import numpy as np
 import pyarrow as pa
 import pyarrow.compute  # noqa: F401 - pa.compute
 import pyarrow.parquet as pq
 
 import datagen
 from gate import Op, compare_rows, row_multiset
-from scripts.check_parity import run_duckdb
 
 _PYTHON_NODE = re.compile(
     r"\b(ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|"
@@ -45,18 +41,6 @@ def python_nodes(df) -> int:
     """Python-evaluation operators in the final physical plan."""
     plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
     return len(_PYTHON_NODE.findall(plan.split("== Initial Plan ==")[0]))
-
-
-def arrow_rows(table) -> list[tuple]:
-    """Rows of an Arrow result as Python tuples typed like DuckDB's
-    ``fetchall`` (timestamps as naive UTC datetimes)."""
-    def plain(v):
-        if isinstance(v, datetime.datetime) and v.tzinfo is not None:
-            return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-        return v
-
-    cols = [c.to_pylist() for c in table.columns]
-    return [tuple(plain(v) for v in row) for row in zip(*cols)]
 
 
 def dir_bytes(path: str) -> int:
@@ -102,84 +86,6 @@ class Ctx:
         return {"spark.jobs_per_op": len(jobs), "spark.tasks_per_op": tasks}
 
 
-# --- analytic_queries ------------------------------------------------------
-
-class QueryWorkload:
-    """A seeded sequence of registry queries over generated tables.
-
-    Each pass runs every query of ``queries`` once in a seeded order, so
-    the timed passes repeat every query; the forcing action delivers the
-    answer to the client as Arrow (``toArrow()``), whose rows the gate
-    compares with the query's DuckDB oracle (``oracle_sql()[name]``)."""
-
-    name = "analytic_queries"
-    #: 3 passes of 10 queries: the tail (ten ops beyond it) is then p67
-    PASSES = 3
-
-    def __init__(self, work: str, seed: int, queries: list[str], sf: float):
-        self.work, self.seed = work, seed
-        self.queries, self.sf = queries, sf
-        self.sf_dir = os.path.join(work, "tables")
-        self.rng = np.random.default_rng(seed)
-        self.rows_in: dict[str, int] = {}
-        self._oracle: dict[str, tuple] = {}
-
-    def generate(self) -> None:
-        self.table_rows = datagen.star_schema(self.sf_dir, self.seed, self.sf)
-        self.input_bytes = dir_bytes(self.sf_dir)
-
-    def prepare(self, spark) -> None:
-        import __spark_entry__ as entry
-
-        self.registry = entry.queries()
-        self.oracles = entry.oracle_sql()
-
-    def mix(self) -> list[str]:
-        names = sorted(self.queries)
-        return [names[i] for i in self.rng.permutation(len(names))]
-
-    def _rows_in(self, df) -> int:
-        """Rows of the generated tables the query's plan scans."""
-        tables = {os.path.basename(p).split(".parquet")[0] for p in df.inputFiles()}
-        return sum(self.table_rows.get(t, 0) for t in tables)
-
-    def run_round(self, name: str, ctx: Ctx) -> list[Op]:
-        group = ctx.begin_op(name)
-        op = Op(self.name, name, 0.0)
-        t0 = time.perf_counter()
-        try:
-            with ctx.span("bench.op"):
-                with ctx.span(f"registry.{name}"):
-                    df = self.registry[name](ctx.spark, self.sf_dir)
-                t1 = time.perf_counter()
-                with ctx.span("spark.to_arrow"):
-                    table = df.toArrow()
-            t2 = time.perf_counter()
-        except Exception as exc:  # noqa: BLE001 - a raising op is a failed op
-            op.latency_s = time.perf_counter() - t0
-            op.error = f"{type(exc).__name__}: {str(exc)[:300]}"
-            return [op]
-        op.latency_s = t2 - t0
-        op.output = (table.column_names, arrow_rows(table))
-        if name not in self.rows_in:  # untimed: first sight of this query
-            self.rows_in[name] = self._rows_in(df)
-        op.rows_in = self.rows_in[name]
-        op.layer = {"operators.plan_build_s": t1 - t0, "spark.execute_s": t2 - t1}
-        if ctx.tracer:
-            from smartbots_etl_facturas_spark.sinks.layout import plan_exchange_count
-
-            op.layer["operators.exchanges"] = plan_exchange_count(df)
-            op.layer["functions.python_nodes"] = python_nodes(df)
-            op.layer.update(ctx.spark_counts(group))
-        return [op]
-
-    def check(self, op: Op) -> str | None:
-        if op.name not in self._oracle:
-            self._oracle[op.name] = row_multiset(
-                *run_duckdb(self.oracles[op.name], self.sf_dir))
-        return compare_rows(op.output, self._oracle[op.name])
-
-
 # --- invoice_ingest --------------------------------------------------------
 
 class IngestWorkload:
@@ -204,10 +110,8 @@ class IngestWorkload:
         self._truth: dict[int, dict] = {}
 
     def generate(self) -> None:
-        tables = os.path.join(self.work, "tables")
-        datagen.star_schema(tables, self.seed, self.sf)
         self.inbox = datagen.invoice_inbox(
-            os.path.join(tables, "lineitem.parquet"), self.inbox_dir,
+            datagen.lineitem(self.seed, self.sf), self.inbox_dir,
             self.seed, self.n_files, self.rows_per_file, self.master_rows)
         self.input_bytes = self.inbox.input_bytes
         os.makedirs(self._inbox(1))
@@ -449,18 +353,18 @@ class StreamWorkload:
     """Events drained one file per trigger through the stateful
     ``streaming.windows.tumbling_agg`` (1 h windows, 2 h watermark,
     update mode) into a foreachBatch sink that writes each micro-batch
-    as its own parquet directory (idempotent per batch id). A timed
-    round drains every event file; the warm-up round the first three."""
+    as its own parquet directory (idempotent per batch id). Every
+    round, the warm-up round too, drains every event file into a fresh
+    checkpoint: a shorter warm-up left the first timed drain's
+    micro-batches 20-30 % slower than the later ones."""
 
     name = "event_stream"
-    WARM_FILES = 3
-    PASSES = 2  # 26 micro-batches: the tail (ten beyond it) is p62
+    PASSES = 3  # 39 micro-batches: the tail (ten beyond it) is p74
 
     def __init__(self, work: str, seed: int, n_events: int, n_files: int):
         self.work, self.seed = work, seed
         self.n_events, self.n_files = n_events, n_files
         self.events_dir = os.path.join(work, "events")
-        self.warm_dir = os.path.join(work, "events-warm")
         self.rounds = 0
         self.outputs: dict[int, tuple[str, str]] = {}
         self._committed: dict[int, str | None] = {}
@@ -469,9 +373,6 @@ class StreamWorkload:
     def generate(self) -> None:
         self.input_bytes = datagen.event_files(
             self.events_dir, self.seed, self.n_events, self.n_files)
-        os.makedirs(self.warm_dir)
-        for name in sorted(os.listdir(self.events_dir))[:self.WARM_FILES]:
-            shutil.copy2(os.path.join(self.events_dir, name), self.warm_dir)
 
     def prepare(self, spark) -> None:
         self._spark = spark
@@ -479,8 +380,7 @@ class StreamWorkload:
     def mix(self) -> list[str]:
         return [self.events_dir]
 
-    def warm_mix(self) -> list[str]:
-        return [self.warm_dir]
+    warm_mix = mix
 
     def run_round(self, events_dir: str, ctx: Ctx) -> list[Op]:
         from smartbots_etl_facturas_spark.streaming.ingest import incremental_file_stream
@@ -539,42 +439,46 @@ class StreamWorkload:
 
     def _oracle(self, events_dir: str) -> tuple:
         if events_dir not in self._truth:
-            cur = duckdb.connect().execute(f"""
+            self._truth[events_dir] = row_multiset(*stream_oracle(events_dir))
+        return self._truth[events_dir]
+
+    def committed(self, out: str) -> tuple[list[str], list[tuple]]:
+        """(columns, rows) a drain committed under ``out``: the last
+        update per window and event type."""
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
+        df = self._spark.read.parquet(out)
+        w = Window.partitionBy("window_start", "event_type").orderBy(F.desc("batch_id"))
+        last = df.withColumn("r", F.row_number().over(w)).filter("r = 1").select(
+            F.unix_micros("window_start").alias("window_start_us"),
+            "event_type", "n", "sum_value")
+        return last.columns, [tuple(r) for r in last.collect()]
+
+    def check(self, op: Op) -> str | None:
+        """The committed output of the op's drain against DuckDB over
+        the drained files."""
+        k = op.output
+        if k not in self._committed:
+            out, events_dir = self.outputs[k]
+            self._committed[k] = compare_rows(self.committed(out), self._oracle(events_dir))
+        return self._committed[k]
+
+
+def stream_oracle(events_dir: str) -> tuple[list[str], list[tuple]]:
+    """(columns, rows) of the stream's operator over ``events_dir`` on
+    DuckDB: per 1 h window and event type, the count and the sum of
+    ``value``."""
+    cur = duckdb.connect().execute(f"""
 SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS window_start_us,
        event_type, count(*) AS n,
        CAST(sum(CAST(value AS DECIMAL(18,4))) AS DOUBLE) AS sum_value
 FROM read_parquet('{events_dir}/*.parquet') GROUP BY ALL""")
-            self._truth[events_dir] = row_multiset(
-                [d[0] for d in cur.description], cur.fetchall())
-        return self._truth[events_dir]
-
-    def check(self, op: Op) -> str | None:
-        """The committed output of the op's drain (last update per
-        window and event type) against DuckDB over the drained files."""
-        k = op.output
-        if k not in self._committed:
-            from pyspark.sql import Window
-            from pyspark.sql import functions as F
-
-            out, events_dir = self.outputs[k]
-            df = self._spark.read.parquet(out)
-            w = Window.partitionBy("window_start", "event_type").orderBy(F.desc("batch_id"))
-            last = df.withColumn("r", F.row_number().over(w)).filter("r = 1").select(
-                F.unix_micros("window_start").alias("window_start_us"),
-                "event_type", "n", "sum_value")
-            got = (last.columns, [tuple(r) for r in last.collect()])
-            self._committed[k] = compare_rows(got, self._oracle(events_dir))
-        return self._committed[k]
+    return [d[0] for d in cur.description], cur.fetchall()
 
 
 def make(name: str, work: str, seed: int):
     """The workload called ``name``, sized for one benchmark run."""
-    if name == "analytic_queries":
-        return QueryWorkload(work, seed, [
-            "pricing_summary", "shipping_priority", "top_customers",
-            "rollup_sales", "cube_sales", "window_rank",
-            "flagship_consolidation", "reconciliation", "upsert_full_status",
-            "validation_errors"], sf=0.01)
     if name == "invoice_ingest":
         return IngestWorkload(work, seed, sf=0.01, n_files=2, rows_per_file=200,
                               master_rows=5_000)
@@ -583,4 +487,4 @@ def make(name: str, work: str, seed: int):
     raise KeyError(name)
 
 
-WORKLOADS = ("invoice_ingest", "analytic_queries", "event_stream")
+WORKLOADS = ("invoice_ingest", "event_stream")
