@@ -7489,11 +7489,11 @@ _CONSOL_SCHEMA = (
 
 
 def q_consolidation_pipeline(spark, sf_dir):
-    """The COMPOSED per-file consolidation plan (plans/consolidation.py
+    """The COMPOSED set-based consolidation round (plans/consolidation.py
     — idempotency → schema validation → validate/split → first-wins
-    dedup → insert-only upsert → reconcile → audit → staged publish)
-    run end-to-end over a deterministic 2-file scenario, returning the
-    PUBLISHED consolidated table. Exercises the pieces *as wired
+    dedup → insert-only upsert → per-file reconcile → audit → staged
+    publish) run end-to-end over a deterministic 2-file scenario,
+    returning the PUBLISHED consolidated table. Exercises the pieces *as wired
     together*, not individually: file 2 re-sends an existing PK (must
     be skipped), both files carry validation errors (must be excluded
     but audited), and the publish only happens because both files
@@ -8174,9 +8174,9 @@ def q_xlsx_to_consolidated(spark, sf_dir):
         "source_file", F.element_at(F.split("source_file", "/"), -1)
     )
     valid, _errors = extract_invoice_files(grid)
-    # consolidate()'s per-file loop IS the reference's transaction
-    # unit (per-file reconcile + rollback); each file's frame is a
-    # filter over the ONE extraction dataflow above
+    # each file's frame is a filter over the ONE extraction dataflow
+    # above; consolidate() keeps the file as the transaction unit
+    # (per-file reconcile + rollback) inside one set-based round
     files = [
         (
             name,

@@ -31,17 +31,24 @@ def reconcile(
     keys: Sequence[str] = PK,
     amount_col: str = "total_amount",
     amount_type: str = DEC,
+    by: str | None = None,
 ) -> DataFrame:
     """One-row reconciliation report DataFrame.
 
     Columns: source_total, result_total, variance, missing_pk_count,
     no_data_loss, amounts_match, reconciled.
 
+    ``by``: a column of both inputs to reconcile per group instead —
+    one report row per ``by`` value present in ``source`` (leading
+    ``by`` column), each equal to the one-row report of that group's
+    ``source`` rows against that group's ``result`` rows.
+
     ``amount_type`` must be a decimal type wide enough to hold the
     amounts WITHOUT narrowing the scale (narrowing rounds, and
     different engines round differently); the default suits raw
     2-decimal money columns.
     """
+    groups = [by] if by else []
     keys = list(keys)
     # Single-pass formulation: pre-aggregate each side per PK, join the
     # (small) per-PK frames once, and derive all three checks from that
@@ -53,27 +60,28 @@ def reconcile(
     #   missing_pk_count = Σ n_src over PKs absent from result (≡ J3
     #   anti-join row count), result_total = Σ result amounts over PKs
     #   present in source (≡ J4 semi-join sum).
-    src_pk = source.groupBy(*keys).agg(
+    src_pk = source.groupBy(*groups, *keys).agg(
         F.sum(F.col(amount_col).cast(amount_type)).alias("__s"),
         F.count(F.lit(1)).alias("__n_src"),
     )
-    res_pk = result.groupBy(*keys).agg(
+    res_pk = result.groupBy(*groups, *keys).agg(
         F.sum(F.col(amount_col).cast(amount_type)).alias("__r"),
         F.count(F.lit(1)).alias("__n_res"),   # presence marker (amounts may be NULL)
     )
-    joined = src_pk.join(res_pk, on=keys, how="left")
-    report = joined.agg(
+    joined = src_pk.join(res_pk, on=[*groups, *keys], how="left")
+    report = joined.groupBy(*groups).agg(
         F.coalesce(F.sum("__s"), F.lit(0).cast(amount_type)).alias("source_total"),
         F.coalesce(F.sum("__r"), F.lit(0).cast(amount_type)).alias("result_total"),
         F.coalesce(F.sum(F.when(F.col("__n_res").isNull(), F.col("__n_src"))),
                    F.lit(0).cast("long")).alias("missing_pk_count"),
     )
-    return _report_select(report)
+    return _report_select(report, *groups)
 
 
-def _report_select(report: DataFrame) -> DataFrame:
-    """Shared final projection of the one-row reconciliation report."""
+def _report_select(report: DataFrame, *groups: str) -> DataFrame:
+    """Shared final projection of the reconciliation report."""
     return report.select(
+        *groups,
         F.col("source_total").cast("double").alias("source_total"),
         F.col("result_total").cast("double").alias("result_total"),
         F.abs(F.col("source_total") - F.col("result_total")).cast("double").alias("variance"),

@@ -2,31 +2,32 @@
 
 Mirrors ConsolidateInvoicesUseCase.execute
 (smartbots-etl/src/application/use_cases/consolidate_invoices.py:45-160)
-re-expressed with the engine's operators: per source file —
-idempotency skip (J5) → schema validation (U2) → clean (P2-P4) →
-validate/split (P9/P10) → first-wins dedup (U4) → insert-only upsert
-(J1) → reconciliation (J3/J4/A1/A2) → audit logging (S9/A3/A4/J6) —
-then staged atomic publish with snapshot retention (S11) and the
-run-level report with SUCCESS/PARTIAL/ERROR/NO_FILES derivation (A5).
+re-expressed with the engine's operators as ONE set-based plan per
+round, keyed by file: idempotency skip (J5) → schema validation (U2) →
+clean (P2-P4) → validate/split (P9/P10) → first-wins dedup (U4) →
+insert-only upsert (J1) → per-file reconciliation (J3/J4/A1/A2) →
+audit logging (S9/A3/A4/J6) → staged atomic publish (S11) → run
+report with SUCCESS/PARTIAL/ERROR/NO_FILES status (A5).
 
-The per-file driver loop is intentional fidelity to the reference's
-transaction unit (file-level rollback + audit granularity); each
-file's dataflow is fully distributed. When per-file audit granularity
-is not needed, the all-files-at-once path is the flagship plan in
-``__spark_entry__.q_flagship_consolidation`` (one Catalyst plan over
-a union of inputs).
+The file stays the reference's transaction unit (file-level rollback
+and audit granularity): the master, report counters and audit rows
+equal those of processing ``files`` one at a time in order. Only the
+driver loop is gone — Catalyst sees the round as one plan over the
+materialized inbox (like ``__spark_entry__.q_flagship_consolidation``),
+so jobs and plan size stay flat as files are added.
 """
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from smartbots_etl_facturas_spark.operators.ordered import dedup_first_wins
 from smartbots_etl_facturas_spark.operators.reconcile import reconcile
-from smartbots_etl_facturas_spark.operators.upsert import upsert_insert_only
 from smartbots_etl_facturas_spark.operators.validation import split_valid, with_validation
 from smartbots_etl_facturas_spark.sinks.audit import AuditWriter
 from smartbots_etl_facturas_spark.sinks.staged import current_version, publish, read_published
@@ -38,6 +39,8 @@ EXPECTED_COLUMNS = [
     "row_idx", "invoice_number", "reference_number", "carrier_name",
     "net_amount", "tax_amount", "total_amount",
 ]
+
+AMOUNT = "decimal(27,6)"
 
 
 @dataclass
@@ -71,142 +74,133 @@ def consolidate(
     files: list[tuple[str, str, DataFrame]],
     consolidated_base: str,
     audit: AuditWriter,
-    checkpoint_every: int = 8,
     plan_sizes: list[int] | None = None,
 ) -> RunReport:
     """Run the consolidation over ``files`` = [(name, modified_time,
-    frame)] and publish the new consolidated version.
+    frame)] as one round and publish the new consolidated version.
 
-    Returns the run report; the consolidated table is published (new
-    version + pointer flip) only when every processed file reconciled
-    — a failed file is logged ERROR and its rows excluded, matching
-    the reference's per-file rollback unit.
+    Within a file the first row per PK (by ``row_idx``) wins, across
+    files the earlier file, and master rows always win. A file failing
+    its schema or reconciliation is logged ERROR and its rows excluded;
+    the files after a failed reconciliation are reconciled again
+    without it (one extra pass per failed file, none normally).
 
-    Lineage is BOUNDED: each iteration stacks an anti-join + union
-    onto the consolidated plan, so every ``checkpoint_every`` files
-    the frame is ``localCheckpoint``-ed (plan truncated to the
-    materialized RDD) and the per-file caches released. Without this,
-    hundreds of files make Catalyst re-analyze an ever-deeper tree
-    and recompute the whole history on each action. On a real cluster
-    at 100 TB, prefer publish-and-reread through the versioned sink
-    (same effect, spill-safe, survives executor loss); localCheckpoint
-    is the right size for the reference's tens-of-files transaction
-    unit. ``plan_sizes``, when a list is supplied, collects
-    len(plan-string) after each processed file (test observability).
+    The round commits in three steps: one record_log append, the
+    publish — a compare-and-swap against the version read at the
+    start, so an overlapping run fails instead of dropping the other
+    run's rows — and one file_log append. A file is COMPLETED (and
+    skipped by J5 next time) only once its rows are published; if the
+    publish raises, every file of the round is logged ERROR and the
+    run is ERROR. ``plan_sizes``, when a list is supplied, gets
+    len(plan-string) of the published frame once per committed file.
     """
-    report = RunReport()
+    report = RunReport(total_files=len(files))
     run_uuid = audit.start_run()
+    start_version = current_version(consolidated_base)
+    master = (read_published(spark, consolidated_base) if start_version
+              else _empty_consolidated(spark))
+    done = audit.completed_files() if start_version else set()
 
-    try:
-        consolidated = read_published(spark, consolidated_base)
-    except FileNotFoundError:
-        consolidated = _empty_consolidated(spark)
+    entries: dict[int, dict] = {}  # position → its file_log row
+    frames = []
 
-    live_caches: list[DataFrame] = []
-    files_since_checkpoint = 0
-    for file_name, modified_time, raw in files:
-        report.total_files += 1
+    def fail(pos: int, exc: Exception, schema_valid: bool = True) -> None:
+        report.files_error += 1
+        report.messages.append(f"{entries[pos]['file_name']}: {exc}")
+        entries[pos].update(status="ERROR", schema_valid=schema_valid, error_message=str(exc))
+
+    for pos, (file_name, modified_time, raw) in enumerate(files):
         # J5 — idempotent skip
-        if current_version(consolidated_base) and audit.is_completed(file_name, modified_time):
+        if (file_name, str(modified_time)) in done:
             report.files_skipped += 1
             continue
-        try:
-            # U2 — declared schema
+        entries[pos] = {"file_log_id": str(uuid.uuid4()), "file_name": file_name,
+                        "file_modified_time": modified_time}
+        try:  # U2 — declared schema
             validate_schema(raw, EXPECTED_COLUMNS)
+        except Exception as exc:
+            fail(pos, exc, schema_valid="schema mismatch" not in str(exc))
+            continue
+        frames.append(raw.select(
+            "row_idx",
+            F.trim(F.coalesce(F.col("invoice_number"), F.lit(""))).alias("invoice_number"),
+            F.trim(F.coalesce(F.col("reference_number"), F.lit(""))).alias("reference_number"),
+            F.trim(F.coalesce(F.col("carrier_name"), F.lit(""))).alias("carrier_name"),
+            F.col("net_amount").cast("decimal(12,2)").alias("net_amount"),
+            F.col("tax_amount").cast("decimal(18,6)").alias("tax_amount"),
+            F.col("total_amount").cast("decimal(18,6)").alias("total_amount"),
+            F.lit(file_name).alias("source_file"),
+            F.lit(pos).alias("__pos"),
+        ))
 
-            incoming = raw.select(
-                "row_idx",
-                F.trim(F.coalesce(F.col("invoice_number"), F.lit(""))).alias("invoice_number"),
-                F.trim(F.coalesce(F.col("reference_number"), F.lit(""))).alias("reference_number"),
-                F.trim(F.coalesce(F.col("carrier_name"), F.lit(""))).alias("carrier_name"),
-                F.col("net_amount").cast("decimal(12,2)").alias("net_amount"),
-                F.col("tax_amount").cast("decimal(18,6)").alias("tax_amount"),
-                F.col("total_amount").cast("decimal(18,6)").alias("total_amount"),
-                F.lit(file_name).alias("source_file"),
-            )
+    pending = [p for p in entries if "status" not in entries[p]]
+    dropped: list[int] = []  # positions that failed reconciliation
 
-            validated = with_validation(incoming).cache()
-            live_caches.append(validated)
+    def keep(df: DataFrame) -> DataFrame:
+        return df.filter(~F.col("__pos").isin(dropped)) if dropped else df
+
+    rows, consolidated = {}, None
+    if frames:
+        try:
+            validated = with_validation(reduce(DataFrame.unionByName, frames)).localCheckpoint()
             valid, errors = split_valid(validated)
-            valid = dedup_first_wins(valid, PK, ["row_idx"]).drop("valid", "error_reason")
-
-            # one aggregation job for both per-file counters (A4),
-            # instead of two separate count() jobs
-            counts = validated.agg(
+            valid = dedup_first_wins(valid, ["__pos", *PK], ["row_idx"])
+            counts = validated.groupBy("__pos").agg(
                 F.count(F.lit(1)).alias("n_total"),
-                F.sum(F.when(~F.col("valid"), 1).otherwise(0)).alias("n_errors"),
-            ).collect()[0]
-            n_total = counts.n_total
-            n_errors = int(counts.n_errors or 0)
-            result = upsert_insert_only(consolidated, valid.drop("row_idx"), PK)
-
-            rec = reconcile(valid, result, PK, amount_type="decimal(27,6)").collect()[0]
-            if not rec.reconciled:
-                raise RuntimeError(
-                    f"reconciliation failed: missing={rec.missing_pk_count} "
-                    f"variance={rec.variance}"
-                )
-
-            # J6 + P10 → record_log
-            new_pks = valid.join(consolidated.select(*PK).distinct(), PK, "left_anti")
-            file_log_id = audit.log_file(
-                run_uuid, file_name,
-                file_modified_time=modified_time, schema_valid=True,
-                rows_total=n_total, rows_valid=n_total - n_errors,
-                rows_error=n_errors, status="COMPLETED",
+                F.count(F.when(~F.col("valid"), 1)).alias("n_errors"),
             )
-            actions = new_pks.select(
+            w = Window.partitionBy(*PK)
+            while True:  # drop the earliest unreconciled file, re-run the rest
+                # PK owner in a sequential insert-only loop: master (-1), else earliest file
+                won = keep(valid).unionByName(
+                    master.select(*PK, "total_amount", F.lit(-1).alias("__pos")),
+                    allowMissingColumns=True,
+                ).withColumn("__first", F.min("__pos").over(w))
+                own = F.col("__pos") == F.col("__first")
+                result = won.withColumn(
+                    "total_amount", F.sum(F.when(own, F.col("total_amount").cast(AMOUNT))).over(w)
+                ).filter(F.col("__pos") >= 0)
+                inserts = won.filter(own).groupBy("__pos").agg(F.count("*").alias("n_inserted"))
+                recs = reconcile(keep(valid), result, PK, amount_type=AMOUNT, by="__pos")
+                stats = counts.join(inserts, "__pos", "left").join(recs, "__pos", "left")
+                rows = {r["__pos"]: r for r in stats.collect()}
+                bad = [p for p in pending if p in rows and rows[p].reconciled is False]
+                if not bad:
+                    break
+                rec = rows[bad[0]]
+                fail(bad[0], RuntimeError(f"reconciliation failed: missing={rec.missing_pk_count} "
+                                          f"variance={rec.variance}"))
+                pending.remove(bad[0])
+                dropped.append(bad[0])
+
+            # J6 + P10 → record_log, one append for the round
+            inserted = won.filter(own & (F.col("__pos") >= 0))
+            records = inserted.withColumn("action", F.lit("INSERT")).unionByName(
+                keep(errors).withColumn("action", F.lit("VALIDATION_ERROR")),
+                allowMissingColumns=True)
+            log_ids = F.array(*[F.lit(entries[p]["file_log_id"] if p in entries else None)
+                                for p in range(len(files))])
+            audit.log_records(records.select(
                 F.lit(run_uuid).alias("run_uuid"),
-                F.lit(file_log_id).alias("file_log_id"),
-                F.col("row_idx").alias("row_index"),
-                "invoice_number", "reference_number",
-                F.lit("INSERT").alias("action"),
-                F.lit(None).cast("string").alias("error_message"),
-            ).unionByName(
-                errors.select(
-                    F.lit(run_uuid).alias("run_uuid"),
-                    F.lit(file_log_id).alias("file_log_id"),
-                    F.col("row_idx").alias("row_index"),
-                    "invoice_number", "reference_number",
-                    F.lit("VALIDATION_ERROR").alias("action"),
-                    F.col("error_reason").alias("error_message"),
-                )
-            ).cache()
-            # the INSERT-action count IS the A3 inserted counter —
-            # derived from the already-needed audit frame, not a
-            # separate anti-join count job
-            n_inserted = actions.filter(F.col("action") == "INSERT").count()
-            audit.log_records(actions)
-            actions.unpersist()
-
-            report.files_ok += 1
-            report.total_records += n_total
-            report.inserted += n_inserted
-            report.validation_errors += n_errors
-            consolidated = result
-            files_since_checkpoint += 1
-            if files_since_checkpoint >= checkpoint_every:
-                # truncate lineage; only then are the per-file caches
-                # safe to drop (the checkpointed RDD no longer
-                # references them)
-                consolidated = consolidated.localCheckpoint()
-                for c in live_caches:
-                    c.unpersist()
-                live_caches.clear()
-                files_since_checkpoint = 0
-            if plan_sizes is not None:
-                plan_sizes.append(
-                    len(consolidated._jdf.queryExecution().toString())  # noqa: SLF001
-                )
+                F.element_at(log_ids, F.col("__pos") + 1).alias("file_log_id"),
+                F.col("row_idx").alias("row_index"), *PK, "action",
+                F.col("error_reason").alias("error_message"),
+            ))
+            consolidated = master.unionByName(inserted.select(*master.columns))
         except Exception as exc:  # per-file failure unit, like the reference
-            report.files_error += 1
-            report.messages.append(f"{file_name}: {exc}")
-            audit.log_file(
-                run_uuid, file_name,
-                file_modified_time=modified_time,
-                schema_valid="schema mismatch" not in str(exc),
-                status="ERROR", error_message=str(exc),
-            )
+            for p in pending:
+                fail(p, exc)
+            pending = []
+
+    for p in pending:  # a file with no rows has no stats row
+        r = rows[p].asDict() if p in rows else {}
+        n_total, n_errors = r.get("n_total", 0), r.get("n_errors", 0)
+        entries[p].update(status="COMPLETED", rows_total=n_total,
+                          rows_valid=n_total - n_errors, rows_error=n_errors)
+        report.files_ok += 1
+        report.total_records += n_total
+        report.inserted += r.get("n_inserted") or 0
+        report.validation_errors += n_errors
 
     # A5 — status derivation (consolidate_invoices.py:140-145)
     if report.total_files == 0:
@@ -221,32 +215,38 @@ def consolidate(
     # S11 — reconcile-before-publish: the check re-runs on the WRITTEN
     # bytes; a failure leaves the previous version current.
     if report.files_ok > 0:
-        totals = consolidated.agg(
-            F.sum(F.col("total_amount").cast("decimal(27,6)")).alias("t"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        expect_n = totals.n
+        if plan_sizes is not None:
+            plan = len(consolidated._jdf.queryExecution().toString())  # noqa: SLF001
+            plan_sizes.extend([plan] * report.files_ok)
+        try:
+            totals = consolidated.agg(
+                F.sum(F.col("total_amount").cast(AMOUNT)).alias("t"),
+                F.count(F.lit(1)).alias("n"),
+            ).collect()[0]
 
-        def check(written: DataFrame) -> None:
-            if written.count() != expect_n:
-                raise RuntimeError("published row count != computed row count")
+            def check(written: DataFrame) -> None:
+                if written.count() != totals.n:
+                    raise RuntimeError("published row count != computed row count")
 
-        publish(consolidated, consolidated_base, check=check)
-        report.output_total = str(totals.t)
+            publish(consolidated, consolidated_base, check=check, expected_version=start_version)
+            report.output_total = str(totals.t)
+        except Exception as exc:  # nothing of the round is published
+            msg = f"publish failed: {type(exc).__name__}: {exc}"
+            for p in pending:
+                entries[p].update(status="ERROR", error_message=msg)
+            report.messages.append(msg)
+            report.files_error += report.files_ok
+            report.files_ok = report.inserted = 0
+            report.status = "ERROR"
 
-    for c in live_caches:  # caches pinned since the last checkpoint
-        c.unpersist()
-
-    audit.finish_run(
-        run_uuid,
-        {
-            "status": report.status,
-            "total_files": report.total_files,
-            "total_records": report.total_records,
-            "inserted": report.inserted,
-            "errors": report.validation_errors,
-            "output_total_amount": report.output_total,
-            "message": "; ".join(report.messages) or None,
-        },
-    )
+    audit.log_files(run_uuid, list(entries.values()))
+    audit.finish_run(run_uuid, {
+        "status": report.status,
+        "total_files": report.total_files,
+        "total_records": report.total_records,
+        "inserted": report.inserted,
+        "errors": report.validation_errors,
+        "output_total_amount": report.output_total,
+        "message": "; ".join(report.messages) or None,
+    })
     return report

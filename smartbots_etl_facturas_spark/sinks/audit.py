@@ -104,19 +104,26 @@ class AuditWriter:
         self._append(df, "execution_runs")
 
     def log_file(self, run_uuid: str, file_name: str, **fields) -> str:
-        file_log_id = str(uuid.uuid4())
-        row = [(
-            file_log_id, run_uuid, file_name,
-            str(fields.get("file_modified_time", "")),
-            fields.get("schema_valid", True),
-            str(fields.get("missing_columns", "[]")),
-            str(fields.get("extra_columns", "[]")),
-            fields.get("rows_total"), fields.get("rows_valid"),
-            fields.get("rows_error"), fields.get("status", "COMPLETED"),
-            fields.get("error_message"),
-        )]
-        self._append(self.spark.createDataFrame(row, FILE_LOG_SCHEMA), "file_log")
-        return file_log_id
+        return self.log_files(run_uuid, [{"file_name": file_name, **fields}])[0]
+
+    def log_files(self, run_uuid: str, entries: list[dict]) -> list[str]:
+        """Append one file_log row per entry (``file_name`` plus the
+        ``log_file`` fields, and optionally a pre-allocated
+        ``file_log_id``) in ONE write; returns the ids in order."""
+        ids = [e.get("file_log_id") or str(uuid.uuid4()) for e in entries]
+        rows = [(
+            file_log_id, run_uuid, e["file_name"],
+            str(e.get("file_modified_time", "")),
+            e.get("schema_valid", True),
+            str(e.get("missing_columns", "[]")),
+            str(e.get("extra_columns", "[]")),
+            e.get("rows_total"), e.get("rows_valid"),
+            e.get("rows_error"), e.get("status", "COMPLETED"),
+            e.get("error_message"),
+        ) for file_log_id, e in zip(ids, entries)]
+        if rows:
+            self._append(self.spark.createDataFrame(rows, FILE_LOG_SCHEMA), "file_log")
+        return ids
 
     def log_records(self, records: DataFrame) -> None:
         """J6 output → record_log append. ``records`` must carry the
@@ -158,16 +165,12 @@ class AuditWriter:
                                                target_files=target_files)
         return out
 
-    def is_completed(self, file_name: str, modified_time: str) -> bool:
-        """J5 idempotency probe against file_log (False when the audit
-        table does not exist yet — first-ever run)."""
+    def completed_files(self) -> set[tuple[str, str]]:
+        """J5 idempotency set: every COMPLETED ``(file_name,
+        file_modified_time)`` in file_log, read in one job (empty when
+        the audit table does not exist yet — first-ever run)."""
         if not os.path.isdir(os.path.join(self.base, "file_log")):
-            return False
-        fl = self.table("file_log")
-        return (
-            fl.filter(
-                (F.col("file_name") == file_name)
-                & (F.col("file_modified_time") == str(modified_time))
-                & (F.col("status") == "COMPLETED")
-            ).limit(1).count() > 0
-        )
+            return set()
+        done = self.table("file_log").filter(F.col("status") == "COMPLETED")
+        return {(r.file_name, r.file_modified_time)
+                for r in done.select("file_name", "file_modified_time").distinct().collect()}

@@ -2,17 +2,21 @@
 reference's integration suite
 (tests/integration/test_consolidation_flow.py): fresh insert,
 append-only proof (old value wins), validation-error audit trail,
-reconciliation, idempotent re-run, NO_FILES.
+reconciliation, idempotent re-run, NO_FILES — plus the round's
+equivalence to a sequential per-file loop, a crash in publish and two
+overlapping runs, each checked against a DuckDB oracle.
 """
 
 from decimal import Decimal
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from smartbots_etl_facturas_spark.plans import consolidation
 from smartbots_etl_facturas_spark.plans.consolidation import consolidate
 from smartbots_etl_facturas_spark.sinks.audit import AuditWriter
-from smartbots_etl_facturas_spark.sinks.staged import read_published
+from smartbots_etl_facturas_spark.sinks.staged import PublishConflictError, read_published
 
 SCHEMA = (
     "row_idx long, invoice_number string, reference_number string, "
@@ -107,38 +111,45 @@ def test_partial_status_on_bad_schema(spark, env):
     assert read_published(spark, base).count() == 1
 
 
-def test_many_files_bounded_lineage(spark, env):
-    """Many-file run: the consolidated plan must stop growing (the
-    localCheckpoint every N files cuts lineage); correctness of the
-    accumulated upsert still holds."""
-    audit, base = env
-    files = [
-        (
-            f"f{i:03d}.xlsx",
-            f"t{i}",
-            _file(spark, [
-                (0, f"F-{i}", "R-1", "TransCo", 10.0, 0.0, 10.0),
-                (1, "F-dup", "R-0", "TransCo", 5.0, 0.0, 5.0),  # same PK every file
-            ]),
-        )
-        for i in range(24)
-    ]
-    sizes: list[int] = []
-    report = consolidate(spark, files, base, audit, checkpoint_every=4, plan_sizes=sizes)
-    assert report.status == "SUCCESS" and report.files_ok == 24
-    # 24 distinct F-i rows + one F-dup (first file wins)
-    out = read_published(spark, base)
-    assert out.count() == 25
-    assert report.inserted == 25
-    # plan size is cyclic with period 4, not monotonically growing:
-    # every post-checkpoint size collapses to the flat baseline, and
-    # the within-cycle peak late in the run is no bigger than the
-    # first cycle's peak
-    early_peak = max(sizes[:4])
-    late_peak = max(sizes[-4:])
-    assert late_peak <= early_peak * 1.5, (early_peak, late_peak, sizes)
-    post_checkpoint = sizes[3::4]  # indices where a checkpoint just ran
-    assert max(post_checkpoint) <= min(post_checkpoint) * 1.5, post_checkpoint
+def test_many_files_flat_cost(spark, tmp_path):
+    """A round is one plan over the materialized inbox: from 4 to 24
+    files the published plan stays the same size (within 10 %) and
+    the round runs at most a few more Spark jobs; the accumulated
+    upsert is still correct."""
+    sc = spark.sparkContext
+
+    def run(n):
+        files = [
+            (
+                f"f{i:03d}.xlsx",
+                f"t{i}",
+                _file(spark, [
+                    (0, f"F-{i}", "R-1", "TransCo", 10.0, 0.0, 10.0),
+                    (1, "F-dup", "R-0", "TransCo", 5.0, 0.0, 5.0),  # same PK every file
+                ]),
+            )
+            for i in range(n)
+        ]
+        base = str(tmp_path / f"consolidated-{n}")
+        sizes: list[int] = []
+        sc.setJobGroup(f"flat-cost-{n}", f"{n}-file round")
+        try:
+            audit = AuditWriter(spark, str(tmp_path / f"audit-{n}"))
+            report = consolidate(spark, files, base, audit, plan_sizes=sizes)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert report.status == "SUCCESS" and report.files_ok == n
+        # n distinct F-i rows + one F-dup (first file wins)
+        assert read_published(spark, base).count() == n + 1
+        assert report.inserted == n + 1
+        assert len(sizes) == n
+        return max(sizes), len(sc.statusTracker().getJobIdsForGroup(f"flat-cost-{n}"))
+
+    plan4, jobs4 = run(4)
+    plan24, jobs24 = run(24)
+    assert abs(plan24 - plan4) <= 0.1 * plan4, (plan4, plan24)
+    assert jobs24 <= jobs4 + 3, (jobs4, jobs24)
 
 
 def test_no_files(spark, env):
@@ -147,3 +158,142 @@ def test_no_files(spark, env):
     assert report.status == "NO_FILES"
     runs = audit.table("execution_runs")
     assert runs.filter(F.col("status") == "NO_FILES").count() == 1
+
+
+def _master(spark, base):
+    return {(r.invoice_number, r.reference_number, r.carrier_name, r.total_amount)
+            for r in read_published(spark, base).collect()}
+
+
+def _completed_inserts(audit):
+    """record_log INSERT rows per file, counting only rows whose
+    file_log row is COMPLETED (a failed run's rows do not count)."""
+    fl = audit.table("file_log").filter(F.col("status") == "COMPLETED")
+    log = audit.table("record_log").filter(F.col("action") == "INSERT")
+    return dict(log.join(fl, "file_log_id").groupBy("file_name").count().collect())
+
+
+def _oracle(inbox):
+    """DuckDB insert-only consolidation of ``inbox`` = [(name, rows)]
+    in commit order into an empty master: (master rows, INSERT count
+    per file)."""
+    con = duckdb.connect()
+    con.execute("CREATE TABLE inbox (pos INT, source_file VARCHAR, row_idx BIGINT, "
+                "invoice_number VARCHAR, reference_number VARCHAR, carrier_name VARCHAR, "
+                "net_amount DECIMAL(18,2), tax_amount DECIMAL(18,2), total_amount DECIMAL(18,2))")
+    con.executemany("INSERT INTO inbox VALUES (?, ?, ?, ?, ?, ?, ?, ?, ?)",
+                    [(pos, name, *r) for pos, (name, rows) in enumerate(inbox) for r in rows])
+    con.execute("""
+CREATE TABLE inserted AS
+SELECT * FROM (SELECT *, row_number() OVER (
+    PARTITION BY invoice_number, reference_number ORDER BY pos, row_idx) AS k
+  FROM inbox
+  WHERE trim(invoice_number) <> '' AND trim(reference_number) <> ''
+    AND trim(carrier_name) <> '' AND total_amount >= 0
+    AND abs(total_amount - (net_amount + tax_amount)) <= 1)
+WHERE k = 1""")
+    master = set(con.execute("SELECT invoice_number, reference_number, carrier_name, "
+                             "total_amount FROM inserted").fetchall())
+    per_file = dict(con.execute(
+        "SELECT source_file, count(*) FROM inserted GROUP BY 1").fetchall())
+    return master, per_file
+
+
+A_ROWS = [(0, "F-1", "R-1", "TransCo", 100.0, 19.0, 119.0),
+          (1, "F-2", "R-1", "TransCo", 10.0, 0.0, 10.0)]
+B_ROWS = [(0, "F-2", "R-1", "TransCo", 10.0, 0.0, 10.0),      # already in a
+          (1, "F-3", "R-1", "OtherCo", 50.0, 9.5, 59.5),
+          (2, "F-3", "R-1", "OtherCo", 70.0, 0.0, 70.0),      # in-file repeat: first wins
+          (3, "", "R-1", "OtherCo", 1.0, 0.0, 1.0)]           # validation error
+C_ROWS = [(0, "F-3", "R-1", "ThirdCo", 50.0, 9.5, 59.5),      # in b
+          (1, "F-4", "R-2", "ThirdCo", 20.0, 0.0, 20.0)]
+
+
+def test_round_equals_sequential_loop(spark, env, tmp_path):
+    """File 1 re-sends a master PK with its total off by more than $1
+    (fails reconciliation) and carries a new PK p; file 2 carries p
+    with another amount. Sequentially file 1 fails, so file 2 inserts
+    ITS p, and file 3 is unaffected: the one-round result must be
+    exactly that, and equal to three one-file rounds."""
+    seed = [(0, "M-1", "R-1", "TransCo", 100.0, 0.0, 100.0)]
+    f1 = [(0, "M-1", "R-1", "TransCo", 150.0, 0.0, 150.0),   # master PK, total +50
+          (1, "P-1", "R-1", "TransCo", 10.0, 0.0, 10.0)]
+    f2 = [(0, "P-1", "R-1", "TransCo", 20.0, 0.0, 20.0),
+          (1, "Q-1", "R-1", "TransCo", 5.0, 0.0, 5.0)]
+    f3 = [(0, "S-1", "R-1", "TransCo", 7.0, 0.0, 7.0),
+          (1, "M-1", "R-1", "TransCo", 100.0, 0.0, 100.0)]
+    inbox = [("f1.xlsx", f1), ("f2.xlsx", f2), ("f3.xlsx", f3)]
+    audit, base = env
+    seq_audit, seq_base = AuditWriter(spark, str(tmp_path / "seq-audit")), str(tmp_path / "seq")
+    for a, b in ((audit, base), (seq_audit, seq_base)):
+        consolidate(spark, [("m.xlsx", "t0", _file(spark, seed))], b, a)
+
+    report = consolidate(spark, [(n, "t1", _file(spark, r)) for n, r in inbox], base, audit)
+    assert report.status == "PARTIAL"
+    assert (report.files_ok, report.files_error, report.inserted) == (2, 1, 3)
+    assert report.total_records == 4 and report.validation_errors == 0
+    assert report.messages and report.messages[0].startswith("f1.xlsx: reconciliation failed")
+    fl = {r.file_name: r for r in audit.table("file_log").collect()}
+    assert fl["f1.xlsx"].status == "ERROR" and fl["f1.xlsx"].schema_valid
+    assert (fl["f2.xlsx"].status, fl["f2.xlsx"].rows_total) == ("COMPLETED", 2)
+    assert (fl["f3.xlsx"].status, fl["f3.xlsx"].rows_total) == ("COMPLETED", 2)
+    assert _completed_inserts(audit) == {"m.xlsx": 1, "f2.xlsx": 2, "f3.xlsx": 1}
+    want = {("M-1", "R-1", "TransCo", Decimal(100)), ("P-1", "R-1", "TransCo", Decimal(20)),
+            ("Q-1", "R-1", "TransCo", Decimal(5)), ("S-1", "R-1", "TransCo", Decimal(7))}
+    assert _master(spark, base) == want
+
+    statuses = [consolidate(spark, [(n, "t1", _file(spark, r))], seq_base, seq_audit).status
+                for n, r in inbox]
+    assert statuses == ["ERROR", "SUCCESS", "SUCCESS"]
+    assert _master(spark, seq_base) == want
+    assert _completed_inserts(seq_audit) == _completed_inserts(audit)
+
+
+def test_publish_crash_then_rerun_reprocesses(spark, env, monkeypatch):
+    """A file is done only once the version holding it is published: a
+    run whose publish raises logs the file ERROR, and the re-run
+    processes it again."""
+    audit, base = env
+    consolidate(spark, [("a.xlsx", "t1", _file(spark, A_ROWS))], base, audit)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("disk full")
+
+    monkeypatch.setattr(consolidation, "publish", crash)
+    report = consolidate(spark, [("b.xlsx", "t1", _file(spark, B_ROWS))], base, audit)
+    assert report.status == "ERROR" and report.files_error == 1 and report.files_ok == 0
+    monkeypatch.undo()
+
+    report = consolidate(spark, [("b.xlsx", "t1", _file(spark, B_ROWS))], base, audit)
+    assert report.status == "SUCCESS" and report.files_skipped == 0
+    master, per_file = _oracle([("a.xlsx", A_ROWS), ("b.xlsx", B_ROWS)])
+    assert report.inserted == per_file["b.xlsx"]
+    assert _master(spark, base) == master
+    assert _completed_inserts(audit) == per_file
+
+
+def test_overlapping_runs_conflict_then_converge(spark, env, monkeypatch):
+    """Two runs start from one published version; the second to
+    publish gets a compare-and-swap conflict (status ERROR) instead of
+    silently dropping the first one's rows, and its re-run converges."""
+    audit, base = env
+    consolidate(spark, [("a.xlsx", "t1", _file(spark, A_ROWS))], base, audit)
+    real_publish = consolidation.publish
+
+    def overlapped(df, base_, **kwargs):
+        # the other run, started from the same version, publishes first
+        monkeypatch.setattr(consolidation, "publish", real_publish)
+        other = consolidate(spark, [("b.xlsx", "t1", _file(spark, B_ROWS))], base, audit)
+        assert other.status == "SUCCESS"
+        return real_publish(df, base_, **kwargs)
+
+    monkeypatch.setattr(consolidation, "publish", overlapped)
+    report = consolidate(spark, [("c.xlsx", "t1", _file(spark, C_ROWS))], base, audit)
+    assert report.status == "ERROR" and report.files_ok == 0
+    assert PublishConflictError.__name__ in report.messages[-1]
+
+    report = consolidate(spark, [("c.xlsx", "t1", _file(spark, C_ROWS))], base, audit)
+    assert report.status == "SUCCESS"
+    master, per_file = _oracle([("a.xlsx", A_ROWS), ("b.xlsx", B_ROWS), ("c.xlsx", C_ROWS)])
+    assert _master(spark, base) == master
+    assert _completed_inserts(audit) == per_file

@@ -45,10 +45,11 @@ def test_audit_idempotency_probe(spark, tmp_path):
     run = aw.start_run()
     aw.log_file(run, "f.parquet", file_modified_time="t1", status="COMPLETED")
     aw.log_file(run, "g.parquet", file_modified_time="t1", status="ERROR")
-    assert aw.is_completed("f.parquet", "t1")
-    assert not aw.is_completed("f.parquet", "t2")    # modified → reprocess
-    assert not aw.is_completed("g.parquet", "t1")    # errored → reprocess
-    assert not aw.is_completed("h.parquet", "t1")    # never seen
+    done = aw.completed_files()
+    assert ("f.parquet", "t1") in done
+    assert ("f.parquet", "t2") not in done    # modified → reprocess
+    assert ("g.parquet", "t1") not in done    # errored → reprocess
+    assert ("h.parquet", "t1") not in done    # never seen
 
 
 def test_log_records_schema_failfast(spark, tmp_path):

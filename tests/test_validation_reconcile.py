@@ -101,6 +101,40 @@ def test_reconcile_insert_only_fusion_equals_composed_form(spark):
         assert rows(fused) == rows(composed)
 
 
+def test_reconcile_by_equals_per_group_calls(spark):
+    """reconcile(by=g) gives, for each g present in the source, the
+    one-row report of reconcile() over that group's rows alone — on
+    duplicate PKs on both sides, NULL amounts, PKs missing from the
+    result, a group with no result rows and a PK shared by groups."""
+    schema = "g int, invoice_number string, reference_number string, total_amount double"
+    source = spark.createDataFrame(
+        [(0, "F1", "R1", 100.0), (0, "F1", "R1", 5.0),    # dup PK
+         (0, "F2", "R2", None),                            # NULL amount
+         (0, "F3", "R3", 30.0),                            # missing in g0's result
+         (1, "F1", "R1", 100.0),                           # PK shared with g0
+         (1, "F4", "R4", 40.0), (1, "F4", "R4", 41.0),
+         (2, "F5", "R5", 50.0)],                           # no result rows at all
+        schema)
+    result = spark.createDataFrame(
+        [(0, "F1", "R1", 104.0), (0, "F1", "R1", 0.5),    # dup PK in result
+         (0, "F2", "R2", 7.0),
+         (0, "F9", "R9", 999.0),                           # not a source PK
+         (1, "F1", "R1", None),                            # NULL result amount
+         (1, "F3", "R3", 30.0),                            # g0's missing PK, other group
+         (1, "F4", "R4", 81.0)],
+        schema)
+
+    got = {r.g: r.asDict() for r in reconcile(source, result, by="g").collect()}
+    assert sorted(got) == [0, 1, 2]
+    for g in got:
+        want = reconcile(source.filter(F.col("g") == g),
+                         result.filter(F.col("g") == g)).collect()[0].asDict()
+        assert {k: v for k, v in got[g].items() if k != "g"} == want, g
+    assert got[0]["missing_pk_count"] == 1 and got[2]["missing_pk_count"] == 1
+    # g1: F1's only result amount is NULL, so 100 of its 181 is unmatched
+    assert got[1]["missing_pk_count"] == 0 and got[1]["variance"] == 100.0
+
+
 def test_reconcile_detects_loss_and_variance(spark):
     schema = "invoice_number string, reference_number string, total_amount double"
     source = spark.createDataFrame([("F1", "R1", 100.0), ("F2", "R2", 200.0)], schema)
