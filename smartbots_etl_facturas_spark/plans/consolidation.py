@@ -2,19 +2,18 @@
 
 Mirrors ConsolidateInvoicesUseCase.execute
 (smartbots-etl/src/application/use_cases/consolidate_invoices.py:45-160)
-re-expressed with the engine's operators as ONE set-based plan per
-round, keyed by file: idempotency skip (J5) → schema validation (U2) →
-clean (P2-P4) → validate/split (P9/P10) → first-wins dedup (U4) →
-insert-only upsert (J1) → per-file reconciliation (J3/J4/A1/A2) →
-audit logging (S9/A3/A4/J6) → staged atomic publish (S11) → run
-report with SUCCESS/PARTIAL/ERROR/NO_FILES status (A5).
+as ONE set-based plan per round, keyed by file: idempotency skip (J5)
+→ schema validation (U2) → clean (P2-P4) → validate/split (P9/P10) →
+first-wins dedup (U4) → insert-only upsert (J1) → per-file
+reconciliation (J3/J4/A1/A2) → audit logging (S9/A3/A4/J6) → staged
+atomic publish (S11) → run status (A5).
 
-The file stays the reference's transaction unit (file-level rollback
-and audit granularity): the master, report counters and audit rows
-equal those of processing ``files`` one at a time in order. Only the
-driver loop is gone — Catalyst sees the round as one plan over the
-materialized inbox (like ``__spark_entry__.q_flagship_consolidation``),
-so jobs and plan size stay flat as files are added.
+The file stays the reference's transaction unit: the master, report
+counters and audit rows equal those of processing ``files`` one at a
+time in order. Only the driver loop is gone — Catalyst sees the round
+as one plan over the materialized inbox (like
+``__spark_entry__.q_flagship_consolidation``), so jobs and plan size
+stay flat as files are added.
 """
 
 from __future__ import annotations
@@ -35,10 +34,8 @@ from smartbots_etl_facturas_spark.sources.readers import validate_schema
 
 PK = ["invoice_number", "reference_number"]
 
-EXPECTED_COLUMNS = [
-    "row_idx", "invoice_number", "reference_number", "carrier_name",
-    "net_amount", "tax_amount", "total_amount",
-]
+EXPECTED_COLUMNS = ["row_idx", "invoice_number", "reference_number", "carrier_name",
+                    "net_amount", "tax_amount", "total_amount"]
 
 AMOUNT = "decimal(27,6)"
 
@@ -61,12 +58,10 @@ class RunReport:
 
 
 def _empty_consolidated(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [],
-        "invoice_number string, reference_number string, carrier_name string, "
-        "net_amount decimal(12,2), tax_amount decimal(18,6), "
-        "total_amount decimal(18,6), source_file string",
-    )
+    return spark.createDataFrame([], "invoice_number string, reference_number string, "
+                                 "carrier_name string, net_amount decimal(12,2), "
+                                 "tax_amount decimal(18,6), total_amount decimal(18,6), "
+                                 "source_file string")
 
 
 def consolidate(
@@ -81,18 +76,17 @@ def consolidate(
 
     Within a file the first row per PK (by ``row_idx``) wins, across
     files the earlier file, and master rows always win. A file failing
-    its schema or reconciliation is logged ERROR and its rows excluded;
-    the files after a failed reconciliation are reconciled again
-    without it (one extra pass per failed file, none normally).
+    its schema, its rows' casts or its reconciliation is logged ERROR
+    and its rows excluded; the files after a failed reconciliation are
+    reconciled again without it (one extra pass per failed file).
 
-    The round commits in three steps: one record_log append, the
-    publish — a compare-and-swap against the version read at the
-    start, so an overlapping run fails instead of dropping the other
-    run's rows — and one file_log append. A file is COMPLETED (and
-    skipped by J5 next time) only once its rows are published; if the
-    publish raises, every file of the round is logged ERROR and the
-    run is ERROR. ``plan_sizes``, when a list is supplied, gets
-    len(plan-string) of the published frame once per committed file.
+    The round commits as one record_log append, the publish (a
+    compare-and-swap against the version read at the start, so an
+    overlapping run fails instead of dropping the other run's rows),
+    then one file_log append: a file is COMPLETED only once its rows
+    are published; if the publish raises, the run is ERROR.
+    ``plan_sizes``, when a list is supplied, gets len(plan-string) of
+    the published frame once per committed file.
     """
     report = RunReport(total_files=len(files))
     run_uuid = audit.start_run()
@@ -102,16 +96,17 @@ def consolidate(
     done = audit.completed_files() if start_version else set()
 
     entries: dict[int, dict] = {}  # position → its file_log row
-    frames = []
+    frames: dict[int, DataFrame] = {}
+    ident = {p: (name, str(modified)) for p, (name, modified, _) in enumerate(files)}
 
-    def fail(pos: int, exc: Exception, schema_valid: bool = True) -> None:
+    def fail(pos: int, exc: Exception) -> None:
         report.files_error += 1
         report.messages.append(f"{entries[pos]['file_name']}: {exc}")
-        entries[pos].update(status="ERROR", schema_valid=schema_valid, error_message=str(exc))
+        entries[pos].update(status="ERROR", schema_valid="schema mismatch" not in str(exc),
+                            error_message=str(exc))
 
     for pos, (file_name, modified_time, raw) in enumerate(files):
-        # J5 — idempotent skip
-        if (file_name, str(modified_time)) in done:
+        if ident[pos] in done:  # J5 — idempotent skip
             report.files_skipped += 1
             continue
         entries[pos] = {"file_log_id": str(uuid.uuid4()), "file_name": file_name,
@@ -119,30 +114,45 @@ def consolidate(
         try:  # U2 — declared schema
             validate_schema(raw, EXPECTED_COLUMNS)
         except Exception as exc:
-            fail(pos, exc, schema_valid="schema mismatch" not in str(exc))
+            fail(pos, exc)
             continue
-        frames.append(raw.select(
-            "row_idx",
-            F.trim(F.coalesce(F.col("invoice_number"), F.lit(""))).alias("invoice_number"),
-            F.trim(F.coalesce(F.col("reference_number"), F.lit(""))).alias("reference_number"),
-            F.trim(F.coalesce(F.col("carrier_name"), F.lit(""))).alias("carrier_name"),
+        frames[pos] = raw.select(
+            "row_idx", *[F.trim(F.coalesce(F.col(c), F.lit(""))).alias(c)
+                         for c in ("invoice_number", "reference_number", "carrier_name")],
             F.col("net_amount").cast("decimal(12,2)").alias("net_amount"),
             F.col("tax_amount").cast("decimal(18,6)").alias("tax_amount"),
             F.col("total_amount").cast("decimal(18,6)").alias("total_amount"),
             F.lit(file_name).alias("source_file"),
             F.lit(pos).alias("__pos"),
-        ))
+            F.lit(entries[pos]["file_log_id"]).alias("file_log_id"),
+        )
 
-    pending = [p for p in entries if "status" not in entries[p]]
-    dropped: list[int] = []  # positions that failed reconciliation
+    def materialize(parts) -> DataFrame:
+        return with_validation(reduce(DataFrame.unionByName, parts)).localCheckpoint()
 
-    def keep(df: DataFrame) -> DataFrame:
-        return df.filter(~F.col("__pos").isin(dropped)) if dropped else df
+    def unfailed() -> list[int]:
+        return [p for p in frames if "status" not in entries[p]]
 
-    rows, consolidated = {}, None
-    if frames:
+    def live() -> list[int]:  # J5 within the round: a repeat runs once its earlier copies failed
+        first: dict = {}
+        return [p for p in unfailed() if first.setdefault(ident[p] if start_version else p, p) == p]
+
+    def keep(df: DataFrame) -> DataFrame:  # only the files live in this pass
+        return df.filter(~F.col("__pos").isin(off)) if off else df
+
+    off, rows, consolidated = [], {}, None
+    try:
         try:
-            validated = with_validation(reduce(DataFrame.unionByName, frames)).localCheckpoint()
+            validated = materialize(frames.values()) if frames else None
+        except Exception:  # a file whose rows raise fails alone, as in a per-file loop
+            parts = []
+            for p, frame in frames.items():
+                try:
+                    parts.append(materialize([frame]))
+                except Exception as exc:
+                    fail(p, exc)
+            validated = reduce(DataFrame.unionByName, parts) if parts else None
+        if validated is not None:
             valid, errors = split_valid(validated)
             valid = dedup_first_wins(valid, ["__pos", *PK], ["row_idx"])
             counts = validated.groupBy("__pos").agg(
@@ -151,6 +161,7 @@ def consolidate(
             )
             w = Window.partitionBy(*PK)
             while True:  # drop the earliest unreconciled file, re-run the rest
+                off = [p for p in frames if p not in live()]
                 # PK owner in a sequential insert-only loop: master (-1), else earliest file
                 won = keep(valid).unionByName(
                     master.select(*PK, "total_amount", F.lit(-1).alias("__pos")),
@@ -164,36 +175,34 @@ def consolidate(
                 recs = reconcile(keep(valid), result, PK, amount_type=AMOUNT, by="__pos")
                 stats = counts.join(inserts, "__pos", "left").join(recs, "__pos", "left")
                 rows = {r["__pos"]: r for r in stats.collect()}
-                bad = [p for p in pending if p in rows and rows[p].reconciled is False]
+                bad = [p for p in live() if p in rows and rows[p].reconciled is False]
                 if not bad:
                     break
                 rec = rows[bad[0]]
                 fail(bad[0], RuntimeError(f"reconciliation failed: missing={rec.missing_pk_count} "
                                           f"variance={rec.variance}"))
-                pending.remove(bad[0])
-                dropped.append(bad[0])
 
             # J6 + P10 → record_log, one append for the round
             inserted = won.filter(own & (F.col("__pos") >= 0))
             records = inserted.withColumn("action", F.lit("INSERT")).unionByName(
                 keep(errors).withColumn("action", F.lit("VALIDATION_ERROR")),
                 allowMissingColumns=True)
-            log_ids = F.array(*[F.lit(entries[p]["file_log_id"] if p in entries else None)
-                                for p in range(len(files))])
             audit.log_records(records.select(
-                F.lit(run_uuid).alias("run_uuid"),
-                F.element_at(log_ids, F.col("__pos") + 1).alias("file_log_id"),
+                F.lit(run_uuid).alias("run_uuid"), "file_log_id",
                 F.col("row_idx").alias("row_index"), *PK, "action",
-                F.col("error_reason").alias("error_message"),
-            ))
+                F.col("error_reason").alias("error_message")))
             consolidated = master.unionByName(inserted.select(*master.columns))
-        except Exception as exc:  # per-file failure unit, like the reference
-            for p in pending:
-                fail(p, exc)
-            pending = []
+    except Exception as exc:  # per-file failure unit, like the reference
+        for p in unfailed():
+            fail(p, exc)
 
-    for p in pending:  # a file with no rows has no stats row
-        r = rows[p].asDict() if p in rows else {}
+    committed = live()
+    for p in unfailed():
+        if p not in committed:  # a repeat of a file this round completed
+            report.files_skipped += 1
+            del entries[p]
+            continue
+        r = rows[p].asDict() if p in rows else {}  # a file with no rows has no stats row
         n_total, n_errors = r.get("n_total", 0), r.get("n_errors", 0)
         entries[p].update(status="COMPLETED", rows_total=n_total,
                           rows_valid=n_total - n_errors, rows_error=n_errors)
@@ -203,14 +212,8 @@ def consolidate(
         report.validation_errors += n_errors
 
     # A5 — status derivation (consolidate_invoices.py:140-145)
-    if report.total_files == 0:
-        report.status = "NO_FILES"
-    elif report.files_error == 0:
-        report.status = "SUCCESS"
-    elif report.files_ok > 0 or report.files_skipped > 0:
-        report.status = "PARTIAL"
-    else:
-        report.status = "ERROR"
+    report.status = ("NO_FILES" if not files else "SUCCESS" if not report.files_error
+                     else "PARTIAL" if report.files_ok or report.files_skipped else "ERROR")
 
     # S11 — reconcile-before-publish: the check re-runs on the WRITTEN
     # bytes; a failure leaves the previous version current.
@@ -232,7 +235,7 @@ def consolidate(
             report.output_total = str(totals.t)
         except Exception as exc:  # nothing of the round is published
             msg = f"publish failed: {type(exc).__name__}: {exc}"
-            for p in pending:
+            for p in committed:
                 entries[p].update(status="ERROR", error_message=msg)
             report.messages.append(msg)
             report.files_error += report.files_ok
@@ -241,12 +244,9 @@ def consolidate(
 
     audit.log_files(run_uuid, list(entries.values()))
     audit.finish_run(run_uuid, {
-        "status": report.status,
-        "total_files": report.total_files,
-        "total_records": report.total_records,
-        "inserted": report.inserted,
-        "errors": report.validation_errors,
-        "output_total_amount": report.output_total,
+        "status": report.status, "total_files": report.total_files,
+        "total_records": report.total_records, "inserted": report.inserted,
+        "errors": report.validation_errors, "output_total_amount": report.output_total,
         "message": "; ".join(report.messages) or None,
     })
     return report

@@ -297,3 +297,45 @@ def test_overlapping_runs_conflict_then_converge(spark, env, monkeypatch):
     master, per_file = _oracle([("a.xlsx", A_ROWS), ("b.xlsx", B_ROWS), ("c.xlsx", C_ROWS)])
     assert _master(spark, base) == master
     assert _completed_inserts(audit) == per_file
+
+
+def test_row_error_fails_only_its_file(spark, env):
+    """A file whose rows raise at run time (here an amount that
+    overflows decimal(12,2) under ANSI casts) is logged ERROR alone;
+    the other files of the round are still published."""
+    audit, base = env
+    huge = [(0, "H-1", "R-1", "TransCo", 1e10, 0.0, 1e10)]
+    inbox = [("a.xlsx", A_ROWS), ("huge.xlsx", huge), ("c.xlsx", C_ROWS)]
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        report = consolidate(spark, [(n, "t1", _file(spark, r)) for n, r in inbox], base, audit)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert report.status == "PARTIAL"
+    assert (report.files_ok, report.files_error) == (2, 1)
+    assert len(report.messages) == 1 and report.messages[0].startswith("huge.xlsx: ")
+    status = {r.file_name: r.status for r in audit.table("file_log").collect()}
+    assert status == {"a.xlsx": "COMPLETED", "huge.xlsx": "ERROR", "c.xlsx": "COMPLETED"}
+    master, per_file = _oracle([("a.xlsx", A_ROWS), ("c.xlsx", C_ROWS)])
+    assert _master(spark, base) == master
+    assert _completed_inserts(audit) == per_file
+
+
+def test_repeated_file_in_round(spark, env):
+    """A file listed twice (same name and modified time) once a version
+    exists is skipped after its first copy completes, and processed
+    again after its first copy fails — as a per-file loop's J5 probe."""
+    audit, base = env
+    seed = [(0, "M-1", "R-1", "TransCo", 100.0, 0.0, 100.0)]
+    consolidate(spark, [("m.xlsx", "t0", _file(spark, seed))], base, audit)
+    bad = [(0, "M-1", "R-1", "TransCo", 150.0, 0.0, 150.0)]  # master PK, total +50
+    inbox = [("bad.xlsx", bad), ("a.xlsx", A_ROWS), ("bad.xlsx", bad), ("a.xlsx", A_ROWS)]
+    report = consolidate(spark, [(n, "t1", _file(spark, r)) for n, r in inbox], base, audit)
+    assert report.status == "PARTIAL"
+    assert (report.files_ok, report.files_error, report.files_skipped) == (1, 2, 1)
+    assert (report.inserted, report.total_records) == (2, 2)
+    fl = audit.table("file_log").filter(F.col("file_name") != "m.xlsx")
+    assert sorted((r.file_name, r.status) for r in fl.collect()) == [
+        ("a.xlsx", "COMPLETED"), ("bad.xlsx", "ERROR"), ("bad.xlsx", "ERROR")]
+    assert _completed_inserts(audit) == {"m.xlsx": 1, "a.xlsx": 2}
