@@ -8141,24 +8141,21 @@ def q_xlsx_distributed(spark, sf_dir):
 def q_xlsx_to_consolidated(spark, sf_dir):
     """The reference's WHOLE entry point
     (scripts/run_consolidation.py:50-126) as one wired pipeline:
-    golden workbooks written as real OOXML files → binaryFile +
-    mapInPandas raw-grid scan (sources/xlsx.py) → SET-BASED
-    multi-file extraction (per-file fixed cells, format detection,
-    header discovery, parsing — plans/extract.py
-    extract_invoice_files, one Catalyst plan, no driver loop) →
-    consolidation (schema validation, validate/split, first-wins
+    golden workbooks written as real OOXML files →
+    plans/consolidation.consolidate_inbox, which reads the inbox once
+    (binaryFile + mapInPandas raw-grid scan, sources/xlsx.py), extracts
+    it once (SET-BASED multi-file extraction: per-file fixed cells,
+    format detection, header discovery, parsing — plans/extract.py
+    extract_invoice_files, materialized at call time) and consolidates
+    it as one round (schema validation, validate/split, first-wins
     dedup, insert-only upsert, reconcile, 3-table audit, staged
-    publish — plans/consolidation.py). Returns the PUBLISHED
-    consolidated table. sf_dir unused: XLSX has no sf-scaled
-    testdata, the golden sheets are the fixture."""
-    from smartbots_etl_facturas_spark.plans.consolidation import consolidate
-    from smartbots_etl_facturas_spark.plans.extract import extract_invoice_files
+    publish). Returns the PUBLISHED consolidated table. sf_dir unused:
+    XLSX has no sf-scaled testdata, the golden sheets are the
+    fixture."""
+    from smartbots_etl_facturas_spark.plans.consolidation import consolidate_inbox
     from smartbots_etl_facturas_spark.sinks.audit import AuditWriter
     from smartbots_etl_facturas_spark.sinks.staged import read_published
-    from smartbots_etl_facturas_spark.sources.xlsx import (
-        read_xlsx_grid_distributed,
-        write_xlsx,
-    )
+    from smartbots_etl_facturas_spark.sources.xlsx import write_xlsx
 
     base = _scratch_dir("x2c_")
     inbox = os.path.join(base, "inbox")
@@ -8169,27 +8166,11 @@ def q_xlsx_to_consolidated(spark, sf_dir):
                [list(r[1:]) for r in GOLDEN_SIMPLE_SHEET],
                use_shared_strings=True)
 
-    grid = read_xlsx_grid_distributed(spark, os.path.join(inbox, "*.xlsx"), n_cols=9)
-    grid = grid.withColumn(
-        "source_file", F.element_at(F.split("source_file", "/"), -1)
-    )
-    valid, _errors = extract_invoice_files(grid)
-    # each file's frame is a filter over the ONE extraction dataflow
-    # above; consolidate() keeps the file as the transaction unit
-    # (per-file reconcile + rollback) inside one set-based round
-    files = [
-        (
-            name,
-            "t1",
-            valid.filter(F.col("source_file") == name).select(
-                "row_idx", "invoice_number", "reference_number",
-                "carrier_name", "net_amount", "tax_amount", "total_amount",
-            ),
-        )
-        for name in ("mixed.xlsx", "simple.xlsx")
-    ]
+    # one read and one materialized extraction for the whole inbox;
+    # each file's frame filters it, and the file stays the transaction
+    # unit (per-file reconcile + rollback) inside one set-based round
     audit = AuditWriter(spark, f"{base}/audit")
-    report = consolidate(spark, files, f"{base}/consolidated", audit)
+    report = consolidate_inbox(spark, inbox, f"{base}/consolidated", audit)
     assert report.status == "SUCCESS", report
     out = read_published(spark, f"{base}/consolidated")
     return out.select(

@@ -14,12 +14,19 @@ time in order. Only the driver loop is gone — Catalyst sees the round
 as one plan over the materialized inbox (like
 ``__spark_entry__.q_flagship_consolidation``), so jobs and plan size
 stay flat as files are added.
+
+:func:`consolidate_inbox` is the program's entry point (the
+reference's scripts/run_consolidation.py): it reads and extracts an
+XLSX inbox directory once, then runs :func:`consolidate` over one
+frame per file; a workbook that does not parse fails alone.
 """
 
 from __future__ import annotations
 
+import os
 import uuid
 from dataclasses import dataclass, field
+from datetime import datetime, timezone
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -28,9 +35,11 @@ from pyspark.sql import functions as F
 from smartbots_etl_facturas_spark.operators.ordered import dedup_first_wins
 from smartbots_etl_facturas_spark.operators.reconcile import reconcile
 from smartbots_etl_facturas_spark.operators.validation import split_valid, with_validation
+from smartbots_etl_facturas_spark.plans.extract import extract_invoice_files
 from smartbots_etl_facturas_spark.sinks.audit import AuditWriter
 from smartbots_etl_facturas_spark.sinks.staged import current_version, publish, read_published
 from smartbots_etl_facturas_spark.sources.readers import validate_schema
+from smartbots_etl_facturas_spark.sources.xlsx import read_xlsx_grid_distributed
 
 PK = ["invoice_number", "reference_number"]
 
@@ -38,6 +47,8 @@ EXPECTED_COLUMNS = ["row_idx", "invoice_number", "reference_number", "carrier_na
                     "net_amount", "tax_amount", "total_amount"]
 
 AMOUNT = "decimal(27,6)"
+
+GRID_COLS = 9  # grid width of the widest invoice layout (mixed: columns A..I)
 
 
 @dataclass
@@ -64,15 +75,44 @@ def _empty_consolidated(spark: SparkSession) -> DataFrame:
                                  "source_file string")
 
 
+def consolidate_inbox(
+    spark: SparkSession, inbox_dir: str, consolidated_base: str, audit: AuditWriter,
+) -> RunReport:
+    """The reference's ``run_consolidation.py``: consolidate every
+    ``*.xlsx`` in ``inbox_dir``, in file-name order, as one round.
+
+    The inbox is read and extracted once (``extract_invoice_files``
+    materializes it); each file's frame filters those rows, and its
+    ``file_modified_time`` is its mtime (UTC, ISO 8601). A workbook
+    that does not parse goes to :func:`consolidate` as a failed entry,
+    so it is logged ERROR and the other files still commit."""
+    names = sorted(n for n in os.listdir(inbox_dir)  # skip what Spark's file listing hides
+                   if n.endswith(".xlsx") and not n.startswith((".", "_")))
+    files: list[tuple[str, str, DataFrame | Exception]] = []
+    if names:
+        grid = read_xlsx_grid_distributed(spark, os.path.join(inbox_dir, "*.xlsx"), GRID_COLS)
+        grid = grid.withColumn("source_file", F.element_at(F.split("source_file", "/"), -1))
+        valid, errors = extract_invoice_files(grid)
+        unreadable = dict(errors.filter(F.col("row_idx") < 0).select("source_file", "error").collect())
+        for n in names:
+            mtime = os.path.getmtime(os.path.join(inbox_dir, n))
+            frame = (RuntimeError(unreadable[n]) if n in unreadable
+                     else valid.filter(F.col("source_file") == n).select(*EXPECTED_COLUMNS))
+            files.append((n, datetime.fromtimestamp(mtime, timezone.utc).isoformat(), frame))
+    return consolidate(spark, files, consolidated_base, audit)
+
+
 def consolidate(
     spark: SparkSession,
-    files: list[tuple[str, str, DataFrame]],
+    files: list[tuple[str, str, DataFrame | Exception]],
     consolidated_base: str,
     audit: AuditWriter,
     plan_sizes: list[int] | None = None,
 ) -> RunReport:
     """Run the consolidation over ``files`` = [(name, modified_time,
-    frame)] as one round and publish the new consolidated version.
+    frame)] as one round and publish the new consolidated version. A
+    file whose frame is an exception (it could not be read) is logged
+    ERROR with that exception's message.
 
     Within a file the first row per PK (by ``row_idx``) wins, across
     files the earlier file, and master rows always win. A file failing
@@ -111,7 +151,9 @@ def consolidate(
             continue
         entries[pos] = {"file_log_id": str(uuid.uuid4()), "file_name": file_name,
                         "file_modified_time": modified_time}
-        try:  # U2 — declared schema
+        try:  # the file could not be read, else U2 — declared schema
+            if isinstance(raw, Exception):
+                raise raw
             validate_schema(raw, EXPECTED_COLUMNS)
         except Exception as exc:
             fail(pos, exc)

@@ -405,9 +405,26 @@ def extract_invoice_files(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     it ``map_from_entries`` would throw under the default
     ``spark.sql.mapKeyDedupPolicy=EXCEPTION`` and one malformed sheet
     would abort the whole multi-file job).
+
+    Materialized at call time: the function runs two Spark actions, a
+    ``localCheckpoint`` of ``raw`` (so an XLSX parse under it runs once)
+    and one of the assembled per-row frame (so the extract's shuffles
+    run once). The returned frames, and every per-file filter a caller
+    takes over them, scan those materialized rows.
+
+    A marker row (``row_idx = -1``, ``c0`` = the error; see
+    ``sources.xlsx.grid_rows``) stands for a workbook that did not
+    parse: it takes no part in detection and yields no valid row, only
+    an ``errors`` row ``unreadable workbook: <c0>`` with ``row_idx`` -1.
     """
+    raw = raw.localCheckpoint()
     cell_cols = [c for c in raw.columns if c not in ("source_file", "row_idx")]
-    cells = raw.select(
+    marker = F.col("row_idx") < 0
+    unreadable = raw.filter(marker).select(
+        "source_file", F.col("row_idx").cast("long").alias("row_idx"),
+        F.concat(F.lit("unreadable workbook: "), F.col(cell_cols[0])).alias("error"),
+    )
+    cells = raw.filter(~marker).select(
         "source_file",
         "row_idx",
         F.posexplode(F.array(*[F.col(c) for c in cell_cols])).alias("col_idx", "val"),
@@ -536,7 +553,7 @@ def extract_invoice_files(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
             ).otherwise(0)
         ).alias("__summary_hit"),
     )
-    r = rows.join(F.broadcast(meta), "source_file")
+    r = rows.join(F.broadcast(meta), "source_file").localCheckpoint()
 
     def g(key):  # raw-cell getter (absent key → NULL struct → NULL)
         return F.element_at(F.col("m"), F.lit(key)).getField("v")
@@ -649,7 +666,7 @@ def extract_invoice_files(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     return (
         mixed_valid.unionByName(simple_valid),
-        mixed_errors.unionByName(simple_errors),
+        unreadable.unionByName(mixed_errors).unionByName(simple_errors),
     )
 
 

@@ -174,6 +174,21 @@ def parse_xlsx_grid(content: bytes, sheet_name=0) -> list[list]:
     ]
 
 
+def grid_rows(content: bytes, sheet_name=0) -> list[tuple[int, list]]:
+    """Workbook bytes -> ``(row_idx, cells)`` pairs of
+    :func:`parse_xlsx_grid`, guarded per workbook: a workbook that does
+    not parse yields ONE marker row ``(-1, ["<ExcType>: <msg>"])``
+    instead of raising, so one corrupt file cannot fail the scan of
+    the others. Both grid readers (``read_xlsx_grid_distributed`` and
+    ``xlsx_datasource``) emit rows through here; ``extract_invoice_files``
+    turns a marker into an ``unreadable workbook`` error row."""
+    try:
+        grid = parse_xlsx_grid(content, sheet_name)
+    except Exception as exc:  # noqa: BLE001 - any parse failure is the file's
+        return [(-1, [f"{type(exc).__name__}: {exc}"])]
+    return list(enumerate(grid))
+
+
 def parse_xlsx_to_pdf(content: bytes, sheet_name=0, header_row: int = 1):
     """Workbook bytes -> pandas DataFrame of string cells, via the
     engine chain openpyxl -> python-calamine -> stdlib codec (the
@@ -335,6 +350,8 @@ def read_xlsx_grid_distributed(
 
     ``n_cols`` pads/truncates every sheet to a fixed grid width (the
     static schema Spark needs); size it to the widest expected layout.
+    A workbook that does not parse becomes one marker row
+    (``row_idx = -1``, ``c0`` = the error; see :func:`grid_rows`).
     """
     binary = spark.read.format("binaryFile").load(path).select("path", "content")
     schema = T.StructType(
@@ -351,18 +368,18 @@ def read_xlsx_grid_distributed(
             sys.path.insert(0, pkg_root)
         import pandas as pd
 
-        from smartbots_etl_facturas_spark.sources.xlsx import parse_xlsx_grid
+        from smartbots_etl_facturas_spark.sources.xlsx import grid_rows
 
         for pdf in batches:
             for path_val, content in zip(pdf["path"], pdf["content"]):
-                grid = parse_xlsx_grid(bytes(content), sheet_name)
+                rows = grid_rows(bytes(content), sheet_name)
                 out = {
-                    "source_file": [path_val] * len(grid),
-                    "row_idx": range(len(grid)),
+                    "source_file": [path_val] * len(rows),
+                    "row_idx": [ri for ri, _ in rows],
                 }
                 for i in range(n_cols):
                     out[f"c{i}"] = [
-                        (row[i] if i < len(row) else None) for row in grid
+                        (row[i] if i < len(row) else None) for _, row in rows
                     ]
                 yield pd.DataFrame(out)
 

@@ -12,9 +12,11 @@ site.
 
 Output contract matches read_xlsx_grid_distributed exactly
 (``source_file, row_idx, c0..c{n_cols-1}`` all-string positional
-grid, row_idx restarting per file), so the whole
-header-discovery/extract stack (plans/extract.py) runs unchanged on
-top of either scan — pinned by tests/test_xlsx_datasource.py.
+grid, row_idx restarting per file, one ``row_idx = -1`` marker row
+for a workbook that does not parse — both emit through ``grid_rows``),
+so the whole header-discovery/extract stack (plans/extract.py) runs
+unchanged on top of either scan — pinned by
+tests/test_xlsx_datasource.py.
 
 Options: ``path`` (file, directory, or glob), ``n_cols`` (grid
 width, default 12), ``sheet`` (index or name, default first).
@@ -80,12 +82,12 @@ class XlsxGridReader(DataSourceReader):
     def read(self, partition: _XlsxFilePartition) -> Iterator[tuple]:
         # executed on the executor; import inside so the class pickles
         # without dragging the parser into the plan description
-        from smartbots_etl_facturas_spark.sources.xlsx import parse_xlsx_grid
+        from smartbots_etl_facturas_spark.sources.xlsx import grid_rows
 
         with open(partition.path, "rb") as f:
-            grid = parse_xlsx_grid(f.read(), self.sheet)
+            rows = grid_rows(f.read(), self.sheet)
         n = self.n_cols
-        for row_idx, row in enumerate(grid):
+        for row_idx, row in rows:
             cells = tuple(
                 row[i] if i < len(row) else None for i in range(n)
             )

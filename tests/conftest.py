@@ -45,3 +45,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def perfbench_workloads():
+    """``perfbench/workloads.py``: the benchmark's inbox generator,
+    ingest oracle and plan probes (its modules import each other by
+    bare name, so their directory goes on ``sys.path``)."""
+    here = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+    if here not in sys.path:
+        sys.path.append(here)
+    import workloads
+
+    return workloads

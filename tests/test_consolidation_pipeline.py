@@ -3,10 +3,12 @@ reference's integration suite
 (tests/integration/test_consolidation_flow.py): fresh insert,
 append-only proof (old value wins), validation-error audit trail,
 reconciliation, idempotent re-run, NO_FILES — plus the round's
-equivalence to a sequential per-file loop, a crash in publish and two
-overlapping runs, each checked against a DuckDB oracle.
+equivalence to a sequential per-file loop, a crash in publish, two
+overlapping runs and a corrupt workbook, each checked against a DuckDB
+oracle.
 """
 
+import os
 from decimal import Decimal
 
 import duckdb
@@ -14,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from smartbots_etl_facturas_spark.plans import consolidation
-from smartbots_etl_facturas_spark.plans.consolidation import consolidate
+from smartbots_etl_facturas_spark.plans.consolidation import consolidate, consolidate_inbox
 from smartbots_etl_facturas_spark.sinks.audit import AuditWriter
 from smartbots_etl_facturas_spark.sinks.staged import PublishConflictError, read_published
 
@@ -339,3 +341,39 @@ def test_repeated_file_in_round(spark, env):
     assert sorted((r.file_name, r.status) for r in fl.collect()) == [
         ("a.xlsx", "COMPLETED"), ("bad.xlsx", "ERROR"), ("bad.xlsx", "ERROR")]
     assert _completed_inserts(audit) == {"m.xlsx": 1, "a.xlsx": 2}
+
+
+def test_corrupt_workbook_fails_alone(spark, tmp_path, perfbench_workloads):
+    """A truncated workbook between two good ones (the benchmark's
+    generated inbox) is logged ERROR as unreadable; the other two
+    files commit, and the master and their record_log counts equal the
+    benchmark's DuckDB ingest oracle over the good files."""
+    wl = perfbench_workloads.IngestWorkload(str(tmp_path / "bench"), seed=7, sf=0.001,
+                                            n_files=2, rows_per_file=40, master_rows=100)
+    wl.generate()
+    wl.prepare(spark)
+    good = [os.path.basename(p) for p in wl.inbox.files]
+    bad = "invoices-0000-truncated.xlsx"
+    with open(wl.inbox.files[0], "rb") as src, open(os.path.join(wl.inbox_dir, bad), "wb") as dst:
+        content = src.read()
+        dst.write(content[: len(content) // 2])
+    audit = AuditWriter(spark, str(tmp_path / "audit"))
+    report = consolidate_inbox(spark, wl.inbox_dir, wl.template, audit)
+
+    assert report.status == "PARTIAL"
+    assert (report.files_ok, report.files_error) == (2, 1)
+    fl = {r.file_name: r for r in audit.table("file_log").collect()}
+    assert fl[bad].status == "ERROR"
+    assert fl[bad].error_message.startswith("unreadable workbook: ")
+    assert [fl[n].status for n in good] == ["COMPLETED", "COMPLETED"]
+
+    truth = wl._oracle(len(good))
+    out = read_published(spark, wl.template)
+    assert tuple(out.agg(F.count(F.lit(1)), F.sum("total_amount")).collect()[0]) == (
+        truth["n"], truth["total"])
+    assert {tuple(r) for r in out.select("invoice_number", "reference_number").collect()} == (
+        truth["pks"])
+    log = audit.table("record_log").join(audit.table("file_log"), "file_log_id")
+    counts = dict(((f, a), c) for f, a, c in log.groupBy("file_name", "action").count().collect())
+    assert {n: [counts.get((n, "INSERT"), 0), counts.get((n, "VALIDATION_ERROR"), 0)]
+            for n in good} == truth["per_file"]

@@ -270,3 +270,64 @@ def test_excel_serial_date_accepted(spark):
     valid, _ = extract_invoice_sheet(serial, "ser.xlsx")
     rows = {r.row_idx: r for r in valid.collect()}
     assert rows[11].invoice_date == datetime.date(2026, 2, 15)
+
+
+def test_extract_parses_inbox_once(spark, tmp_path, perfbench_workloads):
+    """extract_invoice_files materializes the parsed grid and the
+    assembled rows, so a per-file filter over ``valid`` carries no
+    Python-eval node: an action on it does not parse the workbooks
+    again."""
+    from pyspark.sql import functions as F
+
+    from smartbots_etl_facturas_spark.plans.extract import extract_invoice_files
+    from smartbots_etl_facturas_spark.sources.xlsx import (
+        read_xlsx_grid_distributed,
+        write_xlsx,
+    )
+
+    for fname, inv in (("a.xlsx", "F-A"), ("b.xlsx", "F-B")):
+        grid = [[None] * 7 for _ in range(10)]
+        grid.append(["N° Factura", "N° Referencia", "Transportista",
+                     "Monto Neto", "IVA", "Monto Total", "Fecha Factura"])
+        grid.append([inv, "R-1", "Car", "100", "19", "119", "2026-02-15"])
+        write_xlsx(str(tmp_path / fname), {"Hoja1": grid})
+
+    raw = read_xlsx_grid_distributed(spark, str(tmp_path / "*.xlsx"), n_cols=9)
+    raw = raw.withColumn("source_file", F.element_at(F.split("source_file", "/"), -1))
+    assert perfbench_workloads.python_nodes(raw) > 0    # the parse itself
+    valid, _errors = extract_invoice_files(raw)
+    for name, inv in (("a.xlsx", "F-A"), ("b.xlsx", "F-B")):
+        frame = valid.filter(F.col("source_file") == name)
+        assert [r.invoice_number for r in frame.collect()] == [inv]
+        assert perfbench_workloads.python_nodes(frame) == 0
+
+
+def test_unreadable_marker_goes_to_errors(spark):
+    """A reader's marker row (row_idx -1, c0 = the parse error) becomes
+    one ``unreadable workbook`` error row; it yields no valid row and
+    leaves the other files' detection and extraction unchanged."""
+    from pyspark.sql import functions as F
+
+    from smartbots_etl_facturas_spark.plans.extract import extract_invoice_files
+
+    mixed, simple = _mixed_sheet(spark), _simple_sheet(spark)
+    simple9 = simple.select(
+        "*", F.lit(None).cast("string").alias("c7"), F.lit(None).cast("string").alias("c8")
+    )
+    multi = (
+        mixed.select(F.lit("m.xlsx").alias("source_file"), "*")
+        .unionByName(simple9.select(F.lit("s.xlsx").alias("source_file"), "*"))
+    )
+    marker = spark.createDataFrame(
+        [("bad.xlsx", -1, "BadZipFile: File is not a zip file") + (None,) * 8],
+        "source_file string, " + MIXED_SCHEMA,
+    )
+    want_valid, want_errors = extract_invoice_files(multi)
+    got_valid, got_errors = extract_invoice_files(multi.unionByName(marker))
+
+    def rows(df):
+        return sorted(tuple(str(v) for v in r) for r in df.collect())
+
+    assert rows(got_valid) == rows(want_valid)
+    assert rows(got_errors) == sorted(rows(want_errors) + [
+        ("bad.xlsx", "-1", "unreadable workbook: BadZipFile: File is not a zip file")])

@@ -50,6 +50,21 @@ def test_matches_mapinpandas_grid_scan(registered, tmp_path):
     assert a == b and len(a) == 5
 
 
+def test_corrupt_workbook_marker_in_both_readers(registered, tmp_path):
+    """A workbook that does not parse is one marker row (row_idx -1,
+    c0 = the error) in both scans; the good file's rows are unchanged."""
+    base = _write_two(tmp_path)
+    (tmp_path / "bad.xlsx").write_bytes((tmp_path / "one.xlsx").read_bytes()[:100])
+    scans = (
+        registered.read.format("xlsx_grid").option("n_cols", 4).load(f"{base}/*.xlsx"),
+        read_xlsx_grid_distributed(registered, f"{base}/*.xlsx", n_cols=4),
+    )
+    for df in scans:
+        rows = sorted((r.source_file.split("/")[-1], r.row_idx, r.c0) for r in df.collect())
+        assert rows[0] == ("bad.xlsx", -1, "BadZipFile: File is not a zip file")
+        assert len(rows) == 6
+
+
 def test_one_partition_per_file(registered, tmp_path):
     base = _write_two(tmp_path)
     df = registered.read.format("xlsx_grid").load(f"{base}/*.xlsx")
