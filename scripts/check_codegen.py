@@ -17,7 +17,6 @@ import sys
 QUERIES = [
     "invoice_extract_golden",
     "invoice_extract_errors",
-    "invoice_extract_multi",
     "consolidation_pipeline",
     "validation_valid",
     "validation_errors",

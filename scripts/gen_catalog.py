@@ -170,7 +170,8 @@ OP_MAP: dict[str, tuple[str, list[str], list[str]]] = {
            ["tests/test_xlsx.py", "tests/test_xlsx_datasource.py"]),
     "S2": ("sheet/header-row read", ["header_discovery"],
            ["tests/test_xlsx.py"]),
-    "S3": ("fixed-cell scan", ["fixed_cells"], ["tests/test_extract.py"]),
+    "S3": ("fixed-cell scan", ["fixed_cells", "invoice_extract_golden"],
+           ["tests/test_extract.py"]),
     "S4": ("header-row discovery", ["header_discovery"],
            ["tests/test_xlsx.py"]),
     "S5": ("folder listing", ["manifest_listing"],
@@ -198,10 +199,13 @@ OP_MAP: dict[str, tuple[str, list[str], list[str]]] = {
            ["tests/test_extract.py"]),
     "P6": ("null/blank key filter", ["invoice_extract_golden"],
            ["tests/test_extract.py"]),
-    "P7": ("summary-row keyword filter", ["summary_row_filter"],
-           ["tests/test_ordered.py"]),
-    "P8": ("take-while (positional stop)", ["take_while"],
-           ["tests/test_ordered.py", "tests/test_properties.py"]),
+    "P7": ("summary-row keyword filter",
+           ["summary_row_filter", "invoice_extract_golden"],
+           ["tests/test_ordered.py", "tests/test_extract.py"]),
+    "P8": ("take-while (positional stop)",
+           ["take_while", "invoice_extract_golden"],
+           ["tests/test_ordered.py", "tests/test_properties.py",
+            "tests/test_extract.py"]),
     "P9": ("domain-invariant validation", ["validation_valid"],
            ["tests/test_validation_reconcile.py"]),
     "P10": ("validation error side-channel", ["validation_errors"],

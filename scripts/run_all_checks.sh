@@ -17,9 +17,6 @@ step() {
 step "testdata schema drift (fails fast on harness regeneration)" \
   python scripts/check_schemas.py
 
-step "floor coverage (every registered query armed or excluded)" \
-  python scripts/check_floor_coverage.py
-
 step "full pytest" \
   python -m pytest tests/ -q
 
@@ -51,8 +48,5 @@ step "perfbench: gate tests + one invoice_ingest run (expect \"failed\": 0)" \
 
 step "codegen health (expect: codegen fallback lines: 0)" \
   python scripts/check_codegen.py
-
-step "bench (read machine_factor + regressions in the JSON line)" \
-  python bench.py
 
 exit $fail

@@ -44,34 +44,26 @@ def take_while(
     df: DataFrame,
     order_col: str,
     stop_cond: Column,
-    partition_by: Sequence[str] = (),
-    allow_global: bool = False,
+    partition_by: Sequence[str],
 ) -> DataFrame:
     """P8 — keep rows strictly before the first row matching ``stop_cond``
-    (in ``order_col`` order, optionally per partition). Rows at or after
-    the first stop row are dropped; if no row stops, all rows pass.
+    in ``order_col`` order, per ``partition_by`` group. Rows at or after
+    the group's first stop row are dropped; if no row stops, all rows
+    pass.
 
     Implemented as a windowed min-of-stop-position + filter — a single
     shuffle per partition key (none when partition keys align with the
     existing partitioning), no driver-side iteration.
 
-    SCALE GUARD: an empty ``partition_by`` makes the window GLOBAL —
-    Spark moves every row through ONE task to compute the unpartitioned
-    min. That is the correct (inherently global) semantics for a
-    per-file sheet of tens of rows, and a scale-killer for a large
-    table. Callers on per-file-sized frames must say so explicitly with
-    ``allow_global=True``; otherwise a missing ``partition_by`` warns.
+    SCALE GUARD: an empty ``partition_by`` would make the window GLOBAL
+    — Spark would move every row through ONE task — so it raises
+    ``ValueError``. A frame that really is one group passes a constant
+    group column.
     """
-    if not partition_by and not allow_global:
-        import warnings
-
-        warnings.warn(
-            "take_while with empty partition_by uses a GLOBAL window "
-            "(single-task sort/scan of the whole frame). Pass "
-            "partition_by=[...] for large tables, or allow_global=True "
-            "for per-file-sized frames where global semantics are "
-            "intended.",
-            stacklevel=2,
+    if not partition_by:
+        raise ValueError(
+            "take_while needs a non-empty partition_by: an empty one "
+            "is a GLOBAL window (single-task sort/scan of the whole frame)"
         )
     stop_at = F.min(F.when(stop_cond, F.col(order_col))).over(
         Window.partitionBy(*[F.col(c) for c in partition_by])

@@ -1,22 +1,24 @@
-"""Composed mixed-format invoice-sheet extraction (the reference's
-single entry point for reading one sheet, re-expressed as a Spark
-dataflow).
+"""Composed mixed-format invoice extraction (the reference's single
+entry point for reading a sheet, re-expressed as one set-based Spark
+dataflow over many files).
 
 Reference: official_format_extractor.py:91-125 (entry + runtime format
 detection :111-121), :130-246 (mixed path: fixed cells + tabular
 detail), :248-326 (simple tabular path), :455-476 (fixed-cell read),
 :479-495 (A6 total derivation), :499-525 (F2 date formats).
 
-Input contract: ONE sheet as a positional cell grid —
-``DataFrame(row_idx long, c0..cN string)`` — the shape produced by
-``sources.xlsx`` (both the driver shim and the distributed
-binaryFile+mapInPandas reader emit it per file).
+Input contract: the union grid of many sheets as positional cells —
+``DataFrame(source_file string, row_idx long, c0..cN string)`` — the
+shape produced by ``sources.xlsx`` (the distributed
+binaryFile+mapInPandas reader emits it for a whole inbox glob). A
+one-sheet extract is the same call over a one-file grid.
 
 Detection (official_format_extractor.py:111-121): both the
 ``numero_factura`` (C8) and ``empresa_transporte`` (C6) fixed cells
 non-blank → MIXED layout (fixed header cells broadcast onto the
 tabular detail); otherwise SIMPLE tabular (header discovered/row 11,
-stop at first blank invoice).
+stop at first blank invoice). The fixed cells and the layout flag are
+per-file columns of one groupBy — no driver-side collect or branch.
 
 DOCUMENTED DEVIATION — whitespace-only fixed cells: the reference
 tests only ``is not None`` (official_format_extractor.py:111-113), so
@@ -25,10 +27,7 @@ detail row then errors on the blank invoice metadata. This engine
 treats whitespace-only as blank (``trim != ''``) and routes such
 sheets to the SIMPLE path instead — deliberately stricter, since an
 all-whitespace invoice number can never produce a valid mixed-layout
-record. The fixed-cell read is ONE 1-row
-aggregation job and the detection branch is a driver-side decision on
-that row — the same schema-metadata contract as
-``readers.discover_header`` (per-file scalars, never data rows).
+record.
 
 Both paths normalize into ONE StructType (the InvoiceRecord shape,
 entities.py:19-111) plus the P10 error side-channel
@@ -47,14 +46,8 @@ from smartbots_etl_facturas_spark.functions.dates import (
     parse_date_multi,
 )
 from smartbots_etl_facturas_spark.functions.money import parse_money
-from smartbots_etl_facturas_spark.operators.ordered import (
-    drop_all_null_rows,
-    filter_nonblank_key,
-    filter_summary_rows,
-    take_while,
-)
+from smartbots_etl_facturas_spark.operators.ordered import take_while
 from smartbots_etl_facturas_spark.operators.rollup import derived_total
-from smartbots_etl_facturas_spark.sources.readers import discover_header
 
 # cell coordinate -> logical name (official_format_extractor.py:77-84)
 FIXED_CELLS = {
@@ -115,26 +108,6 @@ def _cell_ref(ref: str) -> tuple[int, str]:
     return row, f"c{ci - 1}"
 
 
-def read_fixed_cells(raw: DataFrame, cells: dict[str, str] | None = None) -> DataFrame:
-    """S3 fixed-cell scan over the grid: one 1-row aggregation pulling
-    each named cell (max of an at-most-one-match conditional — no
-    shuffle wider than the 1-row result). Missing grid columns yield
-    NULL, like an out-of-range worksheet read."""
-    cells = cells or FIXED_CELLS
-    aggs = []
-    for ref, name in cells.items():
-        r, c = _cell_ref(ref)
-        if c in raw.columns:
-            aggs.append(F.max(F.when(F.col("row_idx") == r, F.col(c))).alias(name))
-        else:
-            aggs.append(F.max(F.lit(None).cast("string")).alias(name))
-    return raw.agg(*aggs)
-
-
-def _nonblank(v) -> bool:
-    return v is not None and str(v).strip() != ""
-
-
 def parse_sheet_date(col: Column) -> Column:
     """F2 multi-format date parse with an F3 Excel-serial fallback.
 
@@ -153,240 +126,12 @@ def parse_sheet_date(col: Column) -> Column:
     )
 
 
-OUT_COLS = (
-    "row_idx",
-    "invoice_number",
-    "reference_number",
-    "carrier_name",
-    "ship_name",
-    "invoice_date",
-    "net_amount",
-    "tax_amount",
-    "total_amount",
-    "currency",
-    "description",
-    "source_file",
-)
-
-
-def _error_frame(df: DataFrame, source_file: str, cond: Column, msg: Column) -> DataFrame:
-    return df.filter(cond).select(
-        F.lit(source_file).alias("source_file"),
-        F.col("row_idx").cast("long").alias("row_idx"),
-        msg.alias("error"),
-    )
-
-
-def _project_parsed_money(data: DataFrame, cols: list[str]) -> DataFrame:
-    """Project each money column's parse ONCE as ``__parsed::<col>``.
-
-    The parse tree (functions/money.py:33-58) is large; inlining it
-    twice per column (value + is-parseable predicate) times 8 columns
-    used to push the generated whole-stage method past janino's 64 KB
-    bytecode limit, silently dropping the extract plans to interpreted
-    mode. Staging the parse in its own projection keeps every
-    downstream reference a cheap attribute: CollapseProject will not
-    re-inline a non-trivial alias that is consumed more than once, so
-    the tree is generated exactly once per column.
-    """
-    aliases = [
-        parse_money(F.col(c)).alias(f"__parsed::{c}")
-        for c in cols
-        if c in data.columns
-    ]
-    return data.select("*", *aliases) if aliases else data
-
-
-def _money_or_err(data: DataFrame, col: str) -> tuple[Column, Column]:
-    """(parsed decimal, error predicate) for one money column: missing
-    column or NULL cell → 0 (official_format_extractor.py:275-281
-    to_decimal default); non-blank unparseable → per-row error, like
-    the reference's Decimal(str(v)) InvalidOperation.
-
-    Requires :func:`_project_parsed_money` to have staged
-    ``__parsed::<col>`` (falls back to inlining when it has not)."""
-    if col not in data.columns:
-        return F.lit(0).cast(DEC), F.lit(False)
-    raw = F.col(col)
-    staged = f"__parsed::{col}"
-    parsed = F.col(staged) if staged in data.columns else parse_money(raw)
-    bad = raw.isNotNull() & (F.trim(raw) != "") & parsed.isNull()
-    return F.coalesce(parsed, F.lit(0).cast(DEC)), bad
-
-
-def extract_mixed(raw: DataFrame, fixed, source_file: str) -> tuple[DataFrame, DataFrame]:
-    """Mixed layout: fixed header cells broadcast onto the detail rows
-    (official_format_extractor.py:130-246). P5 all-null drop, P6
-    non-blank 'Órdenes de Embarque', P7 NETO/IVA/TOTAL summary-row
-    drop, A6 component-sum-with-override, F2 date parse of the G3
-    fixed cell (a bad/empty fixed date errors EVERY row, mirroring the
-    per-record _parse_date raise at :191)."""
-    data = discover_header(raw, MIXED_KNOWN_HEADERS)
-    cols = [c for c in data.columns if c != "row_idx"]
-    data = drop_all_null_rows(data, cols)
-    if ORDENES_COL not in data.columns:
-        empty = raw.sparkSession.createDataFrame(
-            [], "source_file string, row_idx long, error string"
-        )
-        return _empty_valid(raw), empty
-    data = filter_nonblank_key(data, ORDENES_COL)
-    data = filter_summary_rows(data, cols)
-    data = _project_parsed_money(data, [*MONEY_COMPONENT_COLS, TOTAL_COL])
-
-    comps, money_errs = [], []
-    for c in MONEY_COMPONENT_COLS:
-        parsed, bad = _money_or_err(data, c)
-        comps.append(parsed)
-        money_errs.append((c, bad))
-    if TOTAL_COL in data.columns:
-        total_raw = F.col(f"__parsed::{TOTAL_COL}")
-        total_bad = (
-            F.col(TOTAL_COL).isNotNull()
-            & (F.trim(F.col(TOTAL_COL)) != "")
-            & total_raw.isNull()
-        )
-    else:
-        total_raw, total_bad = F.lit(None).cast(DEC), F.lit(False)
-    total = derived_total(total_raw, comps).cast(DEC)
-
-    date_lit = parse_sheet_date(F.lit(fixed["fecha_emision"]))
-    date_all_bad = not _nonblank(fixed["fecha_emision"])
-
-    err_cond = total_bad
-    err_msg = F.when(total_bad, F.lit(f"unparseable money: {TOTAL_COL}"))
-    for c, bad in money_errs:
-        err_cond = err_cond | bad
-        err_msg = err_msg.when(bad, F.lit(f"unparseable money: {c}"))
-    if date_all_bad:
-        err_cond = F.lit(True)
-        err_msg = F.lit("invalid invoice date: " + repr(fixed["fecha_emision"]))
-    else:
-        err_cond = err_cond | date_lit.isNull()
-        err_msg = F.coalesce(
-            err_msg,
-            F.when(
-                date_lit.isNull(),
-                F.lit("invalid invoice date: " + repr(fixed["fecha_emision"])),
-            ),
-        )
-
-    errors = _error_frame(data, source_file, err_cond, err_msg)
-    obs = (
-        F.coalesce(F.col("Observaciones").cast("string"), F.lit(""))
-        if "Observaciones" in data.columns
-        else F.lit("")
-    )
-    guias = (
-        F.coalesce(F.col("Guías de Despacho").cast("string"), F.lit(""))
-        if "Guías de Despacho" in data.columns
-        else F.lit("")
-    )
-    _ = guias  # dispatch_guides is carried in description-adjacent metadata
-    valid = data.filter(~err_cond).select(
-        F.col("row_idx").cast("long").alias("row_idx"),
-        F.lit(str(fixed["numero_factura"])).alias("invoice_number"),
-        F.coalesce(
-            F.when(F.trim(F.col(ORDENES_COL)) != "", F.trim(F.col(ORDENES_COL))),
-            F.lit("N/A"),
-        ).alias("reference_number"),
-        F.lit(str(fixed["empresa_transporte"])).alias("carrier_name"),
-        F.lit(str(fixed["nave"]) if fixed["nave"] is not None else "").alias("ship_name"),
-        date_lit.alias("invoice_date"),
-        total.alias("net_amount"),
-        F.lit(0).cast(DEC).alias("tax_amount"),
-        total.alias("total_amount"),
-        F.lit("CLP").alias("currency"),
-        obs.alias("description"),
-        F.lit(source_file).alias("source_file"),
-    )
-    return valid, errors
-
-
-def extract_simple(raw: DataFrame, source_file: str) -> tuple[DataFrame, DataFrame]:
-    """Simple tabular layout (official_format_extractor.py:248-326):
-    header discovered (reference hard-codes 'skip 10 rows, row 11 is
-    header' — discovery with fallback_idx=10 is a strict
-    generalization that agrees whenever the header row is findable),
-    P8 take-while stop at the first blank 'N° Factura' (the reference
-    ``break``), per-row money/date parses with the error channel."""
-    data = discover_header(raw, SIMPLE_KNOWN_HEADERS)
-    inv = "N° Factura"
-    if inv not in data.columns:
-        empty = raw.sparkSession.createDataFrame(
-            [], "source_file string, row_idx long, error string"
-        )
-        return _empty_valid(raw), empty
-    stop = F.col(inv).isNull() | (F.trim(F.col(inv)) == "")
-    # one sheet = one file-sized frame: the global window is the
-    # intended semantics (the reference's sequential break)
-    data = take_while(data, "row_idx", stop, allow_global=True)
-    cols = [c for c in data.columns if c != "row_idx"]
-    data = drop_all_null_rows(data, cols)
-    data = _project_parsed_money(data, ["Monto Neto", "IVA", "Monto Total"])
-    if "Fecha Factura" in data.columns:
-        # stage the multi-format date parse once, like the money parses
-        data = data.select(
-            "*", parse_sheet_date(F.col("Fecha Factura")).alias("__parsed::date")
-        )
-
-    net, net_bad = _money_or_err(data, "Monto Neto")
-    tax, tax_bad = _money_or_err(data, "IVA")
-    total, total_bad = _money_or_err(data, "Monto Total")
-    if "Fecha Factura" in data.columns:
-        date = F.col("__parsed::date")
-        date_bad = date.isNull()  # empty AND unparseable both raise (:500-502)
-    else:
-        date, date_bad = F.lit(None).cast("date"), F.lit(True)
-
-    err_cond = net_bad | tax_bad | total_bad | date_bad
-    err_msg = (
-        F.when(net_bad, F.lit("unparseable money: Monto Neto"))
-        .when(tax_bad, F.lit("unparseable money: IVA"))
-        .when(total_bad, F.lit("unparseable money: Monto Total"))
-        .when(date_bad, F.lit("invalid invoice date"))
-    )
-    errors = _error_frame(data, source_file, err_cond, err_msg)
-
-    def _opt(col: str, default: str = "") -> Column:
-        if col not in data.columns:
-            return F.lit(default)
-        return F.coalesce(F.col(col).cast("string"), F.lit(default))
-
-    valid = data.filter(~err_cond).select(
-        F.col("row_idx").cast("long").alias("row_idx"),
-        F.trim(F.col(inv)).alias("invoice_number"),
-        F.coalesce(
-            F.when(F.trim(_opt("N° Referencia")) != "", F.trim(_opt("N° Referencia"))),
-            F.lit("N/A"),
-        ).alias("reference_number"),
-        _opt("Transportista").alias("carrier_name"),
-        _opt("Nave").alias("ship_name"),
-        date.alias("invoice_date"),
-        net.alias("net_amount"),
-        tax.alias("tax_amount"),
-        total.alias("total_amount"),
-        _opt("Moneda", "CLP").alias("currency"),
-        _opt("Descripción").alias("description"),
-        F.lit(source_file).alias("source_file"),
-    )
-    return valid, errors
-
-
-def _empty_valid(raw: DataFrame) -> DataFrame:
-    return raw.sparkSession.createDataFrame(
-        [],
-        "row_idx long, invoice_number string, reference_number string, "
-        "carrier_name string, ship_name string, invoice_date date, "
-        f"net_amount {DEC}, tax_amount {DEC}, total_amount {DEC}, "
-        "currency string, description string, source_file string",
-    )
-
-
 def extract_invoice_files(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """MANY files through ONE plan — the 100 TB shape of
-    :func:`extract_invoice_sheet`. Input:
-    ``(source_file, row_idx, c0..cN)`` — the union grid of many sheets
-    (e.g. from ``sources.xlsx.read_xlsx_grid_distributed``). Per-file
+    """MANY files through ONE plan — the reference's per-sheet
+    ``extract()`` (official_format_extractor.py:91-125) over a whole
+    inbox. Input: ``(source_file, row_idx, c0..cN)`` — the union grid
+    of many sheets (e.g. from
+    ``sources.xlsx.read_xlsx_grid_distributed``). Per-file
     fixed-cell read, format DETECTION, header DISCOVERY, re-headering,
     filtering, parsing and normalization all happen as set-based
     dataflow: no driver-side per-file loop, no per-file collect — the
@@ -398,13 +143,14 @@ def extract_invoice_files(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
     file's discovered header row — the per-file dynamic column layout
     that a static StructType cannot express.
 
-    Semantics match the per-file :func:`extract_invoice_sheet` (proven
-    row-for-row in tests/test_extract.py); one documented deviation:
-    with duplicate header names within one sheet the map keeps the
-    LEFT-MOST column (deterministic first-wins dedup below — without
-    it ``map_from_entries`` would throw under the default
-    ``spark.sql.mapKeyDedupPolicy=EXCEPTION`` and one malformed sheet
-    would abort the whole multi-file job).
+    Semantics are the reference's, proven against the DuckDB golden
+    oracle (``SQL_INVOICE_EXTRACT`` / ``SQL_INVOICE_EXTRACT_ERRORS`` in
+    ``__spark_entry__.py``, run in tests/test_extract.py); one
+    documented deviation: with duplicate header names within one sheet
+    the map keeps the LEFT-MOST column (deterministic first-wins dedup
+    below — without it ``map_from_entries`` would throw under the
+    default ``spark.sql.mapKeyDedupPolicy=EXCEPTION`` and one malformed
+    sheet would abort the whole multi-file job).
 
     Materialized at call time: the function runs two Spark actions, a
     ``localCheckpoint`` of ``raw`` (so an XLSX parse under it runs once)
@@ -543,8 +289,8 @@ def extract_invoice_files(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
         ).alias("m"),
         F.sum(F.when(F.col("val").isNotNull(), 1).otherwise(0)).alias("n_nonnull"),
         # P7 summary flag over ALL cells — including unheadered
-        # passthrough columns, matching the per-file path's
-        # concat-of-every-column scan
+        # passthrough columns, matching the reference's scan of every
+        # value in the row (official_format_extractor.py:174-177)
         F.max(
             F.when(
                 F.col("val").isNotNull()
@@ -593,9 +339,10 @@ def extract_invoice_files(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.lit("invalid invoice date: "), F.coalesce("fecha_emision", F.lit("None"))
     )
     # a BLANK fixed date takes message priority over per-row money
-    # errors (the per-file path's date_all_bad branch); a merely
-    # unparseable non-blank date ranks after money, like the
-    # reference's pydantic-coercion-raises-first ordering
+    # errors (the reference's per-record _parse_date raise,
+    # official_format_extractor.py:191); a merely unparseable
+    # non-blank date ranks after money, like the reference's
+    # pydantic-coercion-raises-first ordering
     err_msg_m = F.when(~nonblank(F.col("fecha_emision")), date_msg).otherwise(
         F.coalesce(err_msg_m, F.when(date_bad_m, date_msg))
     )
@@ -669,19 +416,3 @@ def extract_invoice_files(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
         unreadable.unionByName(mixed_errors).unionByName(simple_errors),
     )
 
-
-def extract_invoice_sheet(
-    raw: DataFrame, source_file: str
-) -> tuple[DataFrame, DataFrame]:
-    """The composed entry point (official_format_extractor.py:91-125):
-    read the fixed cells (one 1-row job), detect the layout, run the
-    matching path, and return ``(valid, errors)`` in the normalized
-    InvoiceRecord schema.
-
-    The ``collect()`` here fetches exactly one 6-column row of
-    per-file header scalars — schema metadata, not data (the same
-    budget class as ``discover_header``'s header probe)."""
-    fixed = read_fixed_cells(raw).collect()[0]
-    if _nonblank(fixed["numero_factura"]) and _nonblank(fixed["empresa_transporte"]):
-        return extract_mixed(raw, fixed, source_file)
-    return extract_simple(raw, source_file)

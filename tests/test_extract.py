@@ -3,10 +3,9 @@ format detection + both layout paths + the error side-channel."""
 
 import datetime
 
-from smartbots_etl_facturas_spark.plans.extract import (
-    extract_invoice_sheet,
-    read_fixed_cells,
-)
+from pyspark.sql import functions as F
+
+from smartbots_etl_facturas_spark.plans.extract import extract_invoice_files
 
 MIXED_SCHEMA = "row_idx long, " + ", ".join(f"c{i} string" for i in range(9))
 SIMPLE_SCHEMA = "row_idx long, " + ", ".join(f"c{i} string" for i in range(7))
@@ -54,18 +53,12 @@ def _simple_sheet(spark):
     return spark.createDataFrame(rows, SIMPLE_SCHEMA)
 
 
-def test_fixed_cells_read(spark):
-    fixed = read_fixed_cells(_mixed_sheet(spark)).collect()[0]
-    assert fixed["empresa_transporte"] == "TransCo"
-    assert fixed["numero_factura"] == "F-1"
-    assert fixed["fecha_emision"] == "15-02-2026"
-    assert fixed["nave"] == "MV Ship"
-    assert fixed["puerto_embarque"] == "Puerto"
-    assert fixed["responsable"] == "Aprobado por: J"
+def _extract_one(sheet, name):
+    return extract_invoice_files(sheet.select(F.lit(name).alias("source_file"), "*"))
 
 
 def test_mixed_detection_and_extraction(spark):
-    valid, errors = extract_invoice_sheet(_mixed_sheet(spark), "m.xlsx")
+    valid, errors = _extract_one(_mixed_sheet(spark), "m.xlsx")
     rows = {r.row_idx: r for r in valid.collect()}
     # P7 dropped 12 (TOTAL keyword), P6 dropped 13 (blank ordenes),
     # P5 dropped 14 (all-null), error channel took 15
@@ -85,7 +78,7 @@ def test_mixed_detection_and_extraction(spark):
 
 
 def test_simple_detection_and_extraction(spark):
-    valid, errors = extract_invoice_sheet(_simple_sheet(spark), "s.xlsx")
+    valid, errors = _extract_one(_simple_sheet(spark), "s.xlsx")
     rows = {r.row_idx: r for r in valid.collect()}
     # take-while stopped at 15 (blank invoice) → 16 never extracted;
     # 13 (money) and 14 (date) went to the error channel
@@ -108,7 +101,7 @@ def test_simple_sheet_missing_invoice_column(spark):
     a crash (the reference returns [] when nothing extracts)."""
     rows = [(i, None, None) for i in range(12)] + [(12, "a", "b")]
     raw = spark.createDataFrame(rows, "row_idx long, c0 string, c1 string")
-    valid, errors = extract_invoice_sheet(raw, "x.xlsx")
+    valid, errors = _extract_one(raw, "x.xlsx")
     assert valid.count() == 0
     assert errors.count() == 0
 
@@ -123,7 +116,7 @@ def test_mixed_bad_fixed_date_errors_every_row(spark):
          for r in sheet.collect()],
         MIXED_SCHEMA,
     )
-    valid, errors = extract_invoice_sheet(bad, "bad.xlsx")
+    valid, errors = _extract_one(bad, "bad.xlsx")
     assert valid.count() == 0
     errs = {r.row_idx: r.error for r in errors.collect()}
     assert sorted(errs) == [10, 11, 15]                # every surviving row
@@ -133,44 +126,18 @@ def test_mixed_bad_fixed_date_errors_every_row(spark):
     assert "Flete" in errs[15]
 
 
-def test_multi_file_extract_matches_per_file(spark):
-    """The set-based many-files plan (extract_invoice_files) must
-    reproduce the per-file extractor row-for-row on a union of a
-    mixed-layout and a simple-layout sheet — including per-file format
-    detection, header discovery, take-while and the error channel."""
-    from pyspark.sql import functions as F
+def test_extract_matches_duckdb_oracle(spark, sf_dir):
+    """The extract over the two golden sheets (one mixed-layout, one
+    simple-layout, as one union grid) must equal its DuckDB oracle SQL
+    row for row — valid rows and the error side-channel — including
+    per-file format detection, header discovery and take-while."""
+    import __spark_entry__ as entry
+    from scripts.check_parity import compare
 
-    from smartbots_etl_facturas_spark.plans.extract import extract_invoice_files
-
-    mixed, simple = _mixed_sheet(spark), _simple_sheet(spark)
-    # union grid: pad the 7-col simple sheet to the 9-col width
-    simple9 = simple.select(
-        "*", F.lit(None).cast("string").alias("c7"), F.lit(None).cast("string").alias("c8")
-    )
-    multi = (
-        mixed.select(F.lit("m.xlsx").alias("source_file"), "*")
-        .unionByName(simple9.select(F.lit("s.xlsx").alias("source_file"), "*"))
-    )
-    got_valid, got_errors = extract_invoice_files(multi)
-
-    exp_mv, exp_me = extract_invoice_sheet(mixed, "m.xlsx")
-    exp_sv, exp_se = extract_invoice_sheet(simple, "s.xlsx")
-    exp_valid = exp_mv.unionByName(exp_sv)
-
-    def key(df):
-        return sorted(
-            (r.source_file, r.row_idx, r.invoice_number, r.reference_number,
-             r.carrier_name, r.ship_name, str(r.invoice_date),
-             float(r.net_amount), float(r.tax_amount), float(r.total_amount),
-             r.currency, r.description)
-            for r in df.collect()
-        )
-
-    assert key(got_valid) == key(exp_valid)
-    got_e = sorted((r.source_file, r.row_idx) for r in got_errors.collect())
-    exp_e = sorted((r.source_file, r.row_idx)
-                   for r in exp_me.unionByName(exp_se).collect())
-    assert got_e == exp_e
+    queries, oracle = entry.queries(), entry.oracle_sql()
+    for name in ("invoice_extract_golden", "invoice_extract_errors"):
+        problems = compare(name, spark, queries[name], oracle[name], sf_dir, verbose=False)
+        assert not problems, (name, problems)
 
 
 def test_multi_file_extract_from_distributed_xlsx(spark, tmp_path):
@@ -178,7 +145,6 @@ def test_multi_file_extract_from_distributed_xlsx(spark, tmp_path):
     with the binaryFile raw-grid reader (parse on executors), extract
     with the set-based multi-file plan — one Catalyst plan, no
     driver-side per-file work."""
-    from smartbots_etl_facturas_spark.plans.extract import extract_invoice_files
     from smartbots_etl_facturas_spark.sources.xlsx import (
         read_xlsx_grid_distributed,
         write_xlsx,
@@ -204,9 +170,6 @@ def test_multi_file_duplicate_headers_first_wins(spark):
     """A sheet with two identical header names must NOT abort the
     multi-file job (map_from_entries would throw under the default
     EXCEPTION dedup policy); the left-most column wins."""
-    from pyspark.sql import functions as F
-
-    from smartbots_etl_facturas_spark.plans.extract import extract_invoice_files
 
     simple = _simple_sheet(spark)
     # duplicate the 'Monto Neto' header into c5 (was 'Monto Total')
@@ -227,14 +190,7 @@ def test_multi_file_duplicate_headers_first_wins(spark):
 
 def test_multi_file_summary_keyword_in_unheadered_column(spark):
     """P7 must scan ALL columns, including cells under a blank header
-    — parity with the per-file path's every-column concat."""
-    from pyspark.sql import functions as F
-
-    from smartbots_etl_facturas_spark.plans.extract import (
-        extract_invoice_files,
-        extract_invoice_sheet,
-    )
-
+    — the reference's every-value keyword scan."""
     mixed = _mixed_sheet(spark)
     # put a summary keyword into unheadered c7 of data row 10
     edited = spark.createDataFrame(
@@ -243,16 +199,8 @@ def test_multi_file_summary_keyword_in_unheadered_column(spark):
          for r in mixed.collect()],
         MIXED_SCHEMA,
     )
-    per_file_rows = sorted(
-        r.row_idx for r in extract_invoice_sheet(edited, "e.xlsx")[0].collect()
-    )
-    multi_rows = sorted(
-        r.row_idx
-        for r in extract_invoice_files(
-            edited.select(F.lit("e.xlsx").alias("source_file"), "*")
-        )[0].collect()
-    )
-    assert per_file_rows == multi_rows == [11]          # row 10 dropped by both
+    rows = sorted(r.row_idx for r in _extract_one(edited, "e.xlsx")[0].collect())
+    assert rows == [11]                                 # row 10 dropped
 
 
 def test_excel_serial_date_accepted(spark):
@@ -267,7 +215,7 @@ def test_excel_serial_date_accepted(spark):
          for r in simple.collect()],
         SIMPLE_SCHEMA,
     )
-    valid, _ = extract_invoice_sheet(serial, "ser.xlsx")
+    valid, _ = _extract_one(serial, "ser.xlsx")
     rows = {r.row_idx: r for r in valid.collect()}
     assert rows[11].invoice_date == datetime.date(2026, 2, 15)
 
@@ -277,9 +225,6 @@ def test_extract_parses_inbox_once(spark, tmp_path, perfbench_workloads):
     assembled rows, so a per-file filter over ``valid`` carries no
     Python-eval node: an action on it does not parse the workbooks
     again."""
-    from pyspark.sql import functions as F
-
-    from smartbots_etl_facturas_spark.plans.extract import extract_invoice_files
     from smartbots_etl_facturas_spark.sources.xlsx import (
         read_xlsx_grid_distributed,
         write_xlsx,
@@ -306,9 +251,6 @@ def test_unreadable_marker_goes_to_errors(spark):
     """A reader's marker row (row_idx -1, c0 = the parse error) becomes
     one ``unreadable workbook`` error row; it yields no valid row and
     leaves the other files' detection and extraction unchanged."""
-    from pyspark.sql import functions as F
-
-    from smartbots_etl_facturas_spark.plans.extract import extract_invoice_files
 
     mixed, simple = _mixed_sheet(spark), _simple_sheet(spark)
     simple9 = simple.select(

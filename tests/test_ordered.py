@@ -37,9 +37,10 @@ def test_take_while_stops_at_first_empty(spark):
     df = spark.createDataFrame(
         [(1, "F1", "a"), (2, "F2", "b"), (3, "", "c"), (4, "F4", "d"), (5, "", "e")], SCHEMA)
     stop = (F.col("key").isNull()) | (F.trim(F.col("key")) == "")
+    one_group = df.withColumn("grp", F.lit(0))
     kept = sorted(
         r.row_idx
-        for r in take_while(df, "row_idx", stop, allow_global=True).collect()
+        for r in take_while(one_group, "row_idx", stop, partition_by=["grp"]).collect()
     )
     assert kept == [1, 2]
 
@@ -47,25 +48,21 @@ def test_take_while_stops_at_first_empty(spark):
 def test_take_while_no_stop_keeps_all(spark):
     df = spark.createDataFrame([(1, "a", "x"), (2, "b", "y")], SCHEMA)
     stop = F.col("key").isNull()
-    assert take_while(df, "row_idx", stop, allow_global=True).count() == 2
+    one_group = df.withColumn("grp", F.lit(0))
+    assert take_while(one_group, "row_idx", stop, partition_by=["grp"]).count() == 2
 
 
 def test_take_while_global_window_warns(spark):
-    """Scale guard: an implicit global window (empty partition_by,
-    no allow_global opt-in) must warn — one task would sort/scan the
-    whole table. Explicit partition_by or allow_global stays silent."""
-    import warnings
-
+    """Scale guard: an empty partition_by (a GLOBAL window — one task
+    would sort/scan the whole table) raises. An explicit partition_by
+    is accepted."""
     import pytest
 
     df = spark.createDataFrame([(1, "a", "x"), (2, None, "y")], SCHEMA)
     stop = F.col("key").isNull()
-    with pytest.warns(UserWarning, match="GLOBAL window"):
-        take_while(df, "row_idx", stop)
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        take_while(df, "row_idx", stop, partition_by=["val"])
-        take_while(df, "row_idx", stop, allow_global=True)
+    with pytest.raises(ValueError, match="GLOBAL window"):
+        take_while(df, "row_idx", stop, partition_by=[])
+    take_while(df, "row_idx", stop, partition_by=["val"])
 
 
 def test_dedup_first_wins(spark):

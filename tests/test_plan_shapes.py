@@ -95,8 +95,8 @@ def test_extract_plans_compile_under_janino_limit(spark, sf_dir):
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         for name in ("invoice_extract_golden", "invoice_extract_errors",
-                     "invoice_extract_multi", "validation_valid",
-                     "validation_errors", "money_parse_golden"):
+                     "validation_valid", "validation_errors",
+                     "money_parse_golden"):
             df = entry.queries()[name](spark, sf_dir)
             out = dbg.codegenString(df._jdf.queryExecution().executedPlan())  # noqa: SLF001
             sizes = [int(m) for m in re.findall(r"maxMethodCodeSize:(-?\d+)", out)]

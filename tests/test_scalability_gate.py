@@ -349,16 +349,6 @@ ALLOW: dict[str, tuple[set, str]] = {
         "same 1-row bitmap broadcast, plus crossJoins of four 1-row "
         "count aggregates into the single invariants row",
     ),
-    "invoice_extract_golden": (
-        {"gwin"},
-        "P8 take-while over ONE sheet: the global window IS the "
-        "reference's sequential break semantics; the multi-file plan "
-        "(invoice_extract_multi) partitions it by source_file",
-    ),
-    "invoice_extract_errors": (
-        {"gwin"},
-        "error side-channel of the same one-sheet take-while",
-    ),
 }
 
 
@@ -395,8 +385,6 @@ ALLOW: dict[str, tuple[set, str]] = {
 #   salted      — as-of carry-forward merge with salt_partitions: the
 #                 window partitions by (key, salt), parallelism
 #                 decoupled from key cardinality (operators/asof.py)
-#   one-sheet   — the reference's sequential single-sheet semantics
-#                 (same justification as the gwin allowlist entries)
 WINDOW_ALLOW: dict[str, str] = {
     "apply_changelog": "per-entity: latest-per-c_custkey rank; key "
                        "cardinality = customers",
@@ -417,12 +405,8 @@ WINDOW_ALLOW: dict[str, str] = {
                     "partitions by (ccy, salt), 3 currencies no longer "
                     "serialize the merge",
     "interarrival_histogram": "per-entity: lag() per user_id",
-    "invoice_extract_errors": "one-sheet: reference's sequential "
-                              "take-while (gwin-allowlisted above)",
-    "invoice_extract_golden": "one-sheet: reference's sequential "
-                              "take-while (gwin-allowlisted above)",
-    "invoice_extract_multi": "per-entity: take-while per source_file "
-                             "(one workbook sheet per group)",
+    "invoice_extract_errors": "per-entity: take-while per source_file",
+    "invoice_extract_golden": "per-entity: take-while per source_file",
     "rolling_window_revenue": "per-entity: 24h range frame per user_id",
     "running_total": "per-entity: cumulative sum per o_custkey",
     "scd2_asof_lookup": "per-entity: SCD2 validity windows per user_id",
