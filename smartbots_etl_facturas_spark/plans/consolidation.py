@@ -27,6 +27,7 @@ import os
 import uuid
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from decimal import Decimal
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -213,9 +214,12 @@ def consolidate(
                 result = won.withColumn(
                     "total_amount", F.sum(F.when(own, F.col("total_amount").cast(AMOUNT))).over(w)
                 ).filter(F.col("__pos") >= 0)
-                inserts = won.filter(own).groupBy("__pos").agg(F.count("*").alias("n_inserted"))
+                # owned rows per position, master (-1) included: the published rows
+                inserts = won.filter(own).groupBy("__pos").agg(
+                    F.count("*").alias("n_inserted"),
+                    F.sum(F.col("total_amount").cast(AMOUNT)).alias("inserted_total"))
                 recs = reconcile(keep(valid), result, PK, amount_type=AMOUNT, by="__pos")
-                stats = counts.join(inserts, "__pos", "left").join(recs, "__pos", "left")
+                stats = counts.join(inserts, "__pos", "full").join(recs, "__pos", "left")
                 rows = {r["__pos"]: r for r in stats.collect()}
                 bad = [p for p in live() if p in rows and rows[p].reconciled is False]
                 if not bad:
@@ -263,18 +267,17 @@ def consolidate(
         if plan_sizes is not None:
             plan = len(consolidated._jdf.queryExecution().toString())  # noqa: SLF001
             plan_sizes.extend([plan] * report.files_ok)
+        published = [rows[p] for p in (-1, *committed) if p in rows]
+        n = sum(r.n_inserted or 0 for r in published)
+        total = sum((r.inserted_total for r in published
+                     if r.inserted_total is not None), Decimal(0))
         try:
-            totals = consolidated.agg(
-                F.sum(F.col("total_amount").cast(AMOUNT)).alias("t"),
-                F.count(F.lit(1)).alias("n"),
-            ).collect()[0]
-
             def check(written: DataFrame) -> None:
-                if written.count() != totals.n:
+                if written.count() != n:
                     raise RuntimeError("published row count != computed row count")
 
             publish(consolidated, consolidated_base, check=check, expected_version=start_version)
-            report.output_total = str(totals.t)
+            report.output_total = str(total)
         except Exception as exc:  # nothing of the round is published
             msg = f"publish failed: {type(exc).__name__}: {exc}"
             for p in committed:

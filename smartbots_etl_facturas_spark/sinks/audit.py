@@ -3,19 +3,25 @@
 Schemas mirror the reference's SQLite DDL
 (smartbots-etl/src/infrastructure/sqlite_tracker.py:15-67):
 execution_runs / file_log / record_log, FK-linked by run_uuid and
-file_log_id. SQLite's WAL+executemany batching becomes one
-``df.write.mode("append")`` per batch — Spark's native append is the
-write-amortization the reference hand-rolled.
+file_log_id. The reference batches small SQLite inserts under WAL.
+Here the rows the driver already holds (a run's start and finish
+rows, a round's file_log rows) are written by the driver as one
+parquet file per call, with no Spark job; record_log, which is
+data-sized, is one Spark ``df.write.mode("append")`` per batch. Both
+kinds of file sit side by side in one table directory, with one schema.
 """
 
 from __future__ import annotations
 
 import os
 import uuid
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .layout import append_driver_rows, compact_append_dir, recover_compactions
 
 RUN_SCHEMA = T.StructType([
     T.StructField("run_uuid", T.StringType(), False),
@@ -63,45 +69,40 @@ RECORD_LOG_SCHEMA = T.StructType([
 
 class AuditWriter:
     """Append-only audit sink rooted at ``base_dir`` (one parquet table
-    per audit relation, each row stamped with current_timestamp — F8).
+    per audit relation, each row stamped with ``created_at`` — F8).
 
-    At cluster scale the same API points at object-store paths; the
-    appends are partition-parallel and never rewrite existing files.
+    Appends never rewrite existing files. The driver-written rows
+    (``start_run``, ``finish_run``, ``log_files``) land through a
+    rename on the local filesystem, so ``base_dir`` is a local path;
+    ``log_records`` is a Spark append.
     """
 
     def __init__(self, spark: SparkSession, base_dir: str) -> None:
         self.spark = spark
         self.base = base_dir
 
-    def _append(self, df: DataFrame, table: str) -> None:
-        df.withColumn("created_at", F.current_timestamp()).write.mode("append").parquet(
-            os.path.join(self.base, table)
-        )
-
     def start_run(self, run_uuid: str | None = None) -> str:
         run_uuid = run_uuid or str(uuid.uuid4())
-        row = [(run_uuid, None, None, "RUNNING", None, None, None, None, None, None,
-                None, None, None)]
-        df = self.spark.createDataFrame(row, RUN_SCHEMA).withColumn(
-            "started_at", F.current_timestamp()
-        )
-        self._append(df, "execution_runs")
+        now = datetime.now(timezone.utc)
+        row = (run_uuid, now, None, "RUNNING", None, None, None, None, None, None,
+               None, None, None)
+        append_driver_rows(os.path.join(self.base, "execution_runs"), RUN_SCHEMA, [row],
+                           created_at=now)
         return run_uuid
 
     def finish_run(self, run_uuid: str, report_row: dict) -> None:
-        row = [(
-            run_uuid, None, None, report_row.get("status"),
+        now = datetime.now(timezone.utc)
+        row = (
+            run_uuid, None, now, report_row.get("status"),
             report_row.get("total_files"), report_row.get("total_records"),
             report_row.get("inserted"), report_row.get("updated"),
             report_row.get("unchanged"), report_row.get("errors"),
             str(report_row.get("source_total_amount", "")),
             str(report_row.get("output_total_amount", "")),
             report_row.get("message"),
-        )]
-        df = self.spark.createDataFrame(row, RUN_SCHEMA).withColumn(
-            "finished_at", F.current_timestamp()
         )
-        self._append(df, "execution_runs")
+        append_driver_rows(os.path.join(self.base, "execution_runs"), RUN_SCHEMA, [row],
+                           created_at=now)
 
     def log_file(self, run_uuid: str, file_name: str, **fields) -> str:
         return self.log_files(run_uuid, [{"file_name": file_name, **fields}])[0]
@@ -109,7 +110,7 @@ class AuditWriter:
     def log_files(self, run_uuid: str, entries: list[dict]) -> list[str]:
         """Append one file_log row per entry (``file_name`` plus the
         ``log_file`` fields, and optionally a pre-allocated
-        ``file_log_id``) in ONE write; returns the ids in order."""
+        ``file_log_id``) as ONE file; returns the ids in order."""
         ids = [e.get("file_log_id") or str(uuid.uuid4()) for e in entries]
         rows = [(
             file_log_id, run_uuid, e["file_name"],
@@ -122,7 +123,8 @@ class AuditWriter:
             e.get("error_message"),
         ) for file_log_id, e in zip(ids, entries)]
         if rows:
-            self._append(self.spark.createDataFrame(rows, FILE_LOG_SCHEMA), "file_log")
+            append_driver_rows(os.path.join(self.base, "file_log"), FILE_LOG_SCHEMA, rows,
+                               created_at=datetime.now(timezone.utc))
         return ids
 
     def log_records(self, records: DataFrame) -> None:
@@ -131,15 +133,15 @@ class AuditWriter:
         missing = set(f.name for f in RECORD_LOG_SCHEMA) - set(records.columns)
         if missing:
             raise ValueError(f"record_log append missing columns: {sorted(missing)}")
-        self._append(records.select(*[f.name for f in RECORD_LOG_SCHEMA]), "record_log")
+        (records.select(*[f.name for f in RECORD_LOG_SCHEMA])
+         .withColumn("created_at", F.current_timestamp())
+         .write.mode("append").parquet(os.path.join(self.base, "record_log")))
 
     def table(self, name: str) -> DataFrame:
         """Read one audit relation. Resolves any compaction interrupted
         by a crash FIRST (roll forward / roll back via the intent log),
         so a restart reader never double-counts rows from the step-4..6
         window — the same single-writer contract as compact() itself."""
-        from .layout import recover_compactions
-
         path = os.path.join(self.base, name)
         if os.path.isdir(path):
             recover_compactions(path)
@@ -153,8 +155,6 @@ class AuditWriter:
         intent-log protocol (sinks/layout.py:compact_append_dir).
         Rows are preserved exactly; pass ``table`` to compact one
         relation, default sweeps all three that exist on disk."""
-        from .layout import compact_append_dir
-
         names = [table] if table else ["execution_runs", "file_log",
                                        "record_log"]
         out: dict[str, dict] = {}

@@ -28,10 +28,15 @@ joins actually drop the Exchange.
 from __future__ import annotations
 
 import os
+import uuid
 from collections.abc import Sequence
+from datetime import datetime
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def zorder_value(cols: Sequence[Column], bits: int = 16) -> Column:
@@ -132,7 +137,6 @@ def write_bucketed(
         return
 
     import shutil
-    import uuid
     from urllib.parse import urlparse
 
     if len(parts) == 1:
@@ -227,6 +231,38 @@ def _append_dir_data_files(path: str) -> list[str]:
     )
 
 
+_ARROW_TYPES = {"string": pa.string(), "long": pa.int64(), "double": pa.float64(),
+                "boolean": pa.bool_(), "timestamp": pa.timestamp("us", tz="UTC")}
+
+
+def append_driver_rows(path: str, schema: T.StructType, rows: list[tuple],
+                       created_at: datetime | None = None) -> None:
+    """Append rows the driver already holds (tuples in ``schema``
+    order) to the append-only parquet table at ``path`` as ONE new
+    ``part-<uuid>.parquet`` file written by pyarrow: no Spark job for
+    a metadata-sized write. ``created_at``, when given, stamps every
+    row in a trailing column of that name.
+
+    The Arrow schema is derived from ``schema`` and matches what
+    Spark's writer leaves: every field nullable, timestamps as
+    UTC-adjusted microseconds (read back as TimestampType, not
+    TimestampNTZType). The file is written under a ``.``-prefixed name
+    and renamed into place, so Spark, ``_append_dir_data_files`` and
+    compaction never see a partial file — local-filesystem scope, like
+    the staged sink's pointer flip."""
+    fields = [(f.name, _ARROW_TYPES[f.dataType.typeName()]) for f in schema]
+    if created_at is not None:
+        fields.append(("created_at", _ARROW_TYPES["timestamp"]))
+        rows = [(*r, created_at) for r in rows]
+    arrow = pa.schema(fields)
+    table = pa.Table.from_pylist([dict(zip(arrow.names, r)) for r in rows], schema=arrow)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4()}.parquet"
+    tmp = os.path.join(path, f".{name}")
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, name))
+
+
 def recover_compactions(path: str) -> int:
     """Finish or roll back compactions interrupted by a crash; returns
     the number of intent logs resolved. Idempotent."""
@@ -276,7 +312,6 @@ def compact_append_dir(
     snapshot are untouched (they are not in the input list)."""
     import json
     import shutil
-    import uuid
 
     if not os.path.isdir(path):  # never-written table: nothing to do
         return {"files_before": 0, "files_after": 0, "rows": None,

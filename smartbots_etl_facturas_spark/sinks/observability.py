@@ -20,11 +20,11 @@ session-assigned and differ run-to-run, so they are normalized out
 before hashing; the fingerprint is stable across sessions for the
 same logical plan, and changes when the plan shape changes.
 
-Scale: one driver-side plan-string render + one 1-row append per
-query — O(plan size), independent of data volume. The table is
-partition-parallel parquet like every audit relation; at cluster
-scale it points at an object store and feeds the same dashboards the
-reference's tracker did.
+Scale: one driver-side plan-string render + one 1-row parquet file
+per query, written by the driver without a Spark job
+(sinks/layout.py:append_driver_rows) — O(plan size), independent of
+data volume. Like the driver-written audit rows, the table lives on
+the local filesystem.
 """
 
 from __future__ import annotations
@@ -33,10 +33,13 @@ import hashlib
 import os
 import re
 import time
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .layout import append_driver_rows, compact_append_dir, recover_compactions
 
 QUERY_RUN_SCHEMA = T.StructType([
     T.StructField("run_uuid", T.StringType(), False),
@@ -89,10 +92,8 @@ class QueryRunReporter:
         self.run_uuid = run_uuid or str(uuid.uuid4())
 
     def _append(self, row: tuple) -> None:
-        df = self.spark.createDataFrame([row], QUERY_RUN_SCHEMA).withColumn(
-            "created_at", F.current_timestamp()
-        )
-        df.write.mode("append").parquet(os.path.join(self.base, "query_runs"))
+        append_driver_rows(os.path.join(self.base, "query_runs"), QUERY_RUN_SCHEMA,
+                           [row], created_at=datetime.now(timezone.utc))
 
     def run(self, query_name: str, df: DataFrame) -> int:
         """Execute ``df`` (count action), report one row, return the
@@ -216,8 +217,6 @@ class StreamBatchAuditor:
         back, sinks/layout.py), so a restart reader — including
         :meth:`_load_completed` rebuilding the completed-id set — never
         sees duplicated rows from the step-4..6 window."""
-        from .layout import recover_compactions
-
         if os.path.isdir(self._path()):
             recover_compactions(self._path())
         return self.spark.read.schema(STREAM_BATCH_SCHEMA).parquet(
@@ -282,8 +281,7 @@ class StreamBatchAuditor:
                None if n_rows is None else int(n_rows),
                None if wall_seconds is None else float(wall_seconds),
                status)
-        (self.spark.createDataFrame([row], STREAM_BATCH_SCHEMA)
-         .write.mode("append").parquet(self._path()))
+        append_driver_rows(self._path(), STREAM_BATCH_SCHEMA, [row])
         if status == "COMPLETED":
             from smartbots_etl_facturas_spark.streaming._batchlog import (
                 mark_merged,
@@ -302,8 +300,6 @@ class StreamBatchAuditor:
         exactly, appends racing the snapshot untouched. Safe to call
         from the owning process between batches; the in-memory
         completed-id cache is unaffected (same rows)."""
-        from .layout import compact_append_dir
-
         return compact_append_dir(self.spark, self._path(),
                                   target_files=target_files)
 

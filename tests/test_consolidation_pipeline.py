@@ -8,6 +8,7 @@ overlapping runs and a corrupt workbook, each checked against a DuckDB
 oracle.
 """
 
+import glob
 import os
 from decimal import Decimal
 
@@ -18,7 +19,11 @@ from pyspark.sql import functions as F
 from smartbots_etl_facturas_spark.plans import consolidation
 from smartbots_etl_facturas_spark.plans.consolidation import consolidate, consolidate_inbox
 from smartbots_etl_facturas_spark.sinks.audit import AuditWriter
-from smartbots_etl_facturas_spark.sinks.staged import PublishConflictError, read_published
+from smartbots_etl_facturas_spark.sinks.staged import (
+    PublishConflictError,
+    current_version,
+    read_published,
+)
 
 SCHEMA = (
     "row_idx long, invoice_number string, reference_number string, "
@@ -249,6 +254,32 @@ def test_round_equals_sequential_loop(spark, env, tmp_path):
     assert statuses == ["ERROR", "SUCCESS", "SUCCESS"]
     assert _master(spark, seq_base) == want
     assert _completed_inserts(seq_audit) == _completed_inserts(audit)
+
+
+def test_round_output_total_matches_published_master(spark, env):
+    """The round of test_round_equals_sequential_loop, where f1 fails
+    reconciliation: RunReport.output_total and the finish_run row's
+    output_total_amount both equal DuckDB's sum(total_amount) over the
+    published master's files."""
+    seed = [(0, "M-1", "R-1", "TransCo", 100.0, 0.0, 100.0)]
+    inbox = [("f1.xlsx", [(0, "M-1", "R-1", "TransCo", 150.0, 0.0, 150.0),
+                          (1, "P-1", "R-1", "TransCo", 10.0, 0.0, 10.0)]),
+             ("f2.xlsx", [(0, "P-1", "R-1", "TransCo", 20.0, 0.0, 20.0),
+                          (1, "Q-1", "R-1", "TransCo", 5.0, 0.0, 5.0)]),
+             ("f3.xlsx", [(0, "S-1", "R-1", "TransCo", 7.0, 0.0, 7.0),
+                          (1, "M-1", "R-1", "TransCo", 100.0, 0.0, 100.0)])]
+    audit, base = env
+    consolidate(spark, [("m.xlsx", "t0", _file(spark, seed))], base, audit)
+    report = consolidate(spark, [(n, "t1", _file(spark, r)) for n, r in inbox], base, audit)
+    assert report.status == "PARTIAL" and report.files_error == 1
+
+    files = glob.glob(os.path.join(base, current_version(base), "*.parquet"))
+    want = duckdb.connect().execute(
+        "SELECT sum(total_amount) FROM read_parquet(?)", [files]).fetchone()[0]
+    assert want == Decimal(132)                     # M-1 100 + P-1 20 + Q-1 5 + S-1 7
+    assert Decimal(report.output_total) == want
+    finish = audit.table("execution_runs").filter(F.col("status") == "PARTIAL").collect()
+    assert [Decimal(r.output_total_amount) for r in finish] == [want]
 
 
 def test_publish_crash_then_rerun_reprocesses(spark, env, monkeypatch):

@@ -1,9 +1,16 @@
 """S9 audit trail and S11 staged publish/rollback semantics."""
 
+import glob
+import os
+from datetime import datetime, timezone
+
+import duckdb
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from smartbots_etl_facturas_spark.sinks.audit import AuditWriter
+from smartbots_etl_facturas_spark.sinks.audit import FILE_LOG_SCHEMA, RUN_SCHEMA, AuditWriter
+from smartbots_etl_facturas_spark.sinks.layout import _append_dir_data_files
 from smartbots_etl_facturas_spark.sinks.staged import (
     current_version,
     list_versions,
@@ -57,6 +64,87 @@ def test_log_records_schema_failfast(spark, tmp_path):
     bad = spark.createDataFrame([("x",)], "run_uuid string")
     with pytest.raises(ValueError, match="missing columns"):
         aw.log_records(bad)
+
+
+_TIMESTAMPS = ("started_at", "finished_at", "created_at")
+
+
+def test_audit_tables_mix_spark_and_driver_written_files(spark, tmp_path):
+    """One audit directory holding files from both writers: the Spark
+    write these tables had before (one-row ``createDataFrame(...)
+    .write``) and the driver-side writer. table(), completed_files()
+    and compact() return the rows DuckDB reads from the data files,
+    every timestamp reads as TimestampType holding the same UTC
+    instant, and a dot-prefixed temp file left by a killed writer is
+    ignored."""
+    base = tmp_path / "audit"
+    aw = AuditWriter(spark, str(base))
+    t0 = datetime.now(timezone.utc)
+
+    def spark_append(table, schema, rows, stamp):
+        df = spark.createDataFrame(rows, schema)
+        for c in stamp:
+            df = df.withColumn(c, F.current_timestamp())
+        df.write.mode("append").parquet(str(base / table))
+
+    spark_append("execution_runs", RUN_SCHEMA,
+                 [("spark-run", None, None, "RUNNING", *[None] * 9)], ("started_at", "created_at"))
+    spark_append("file_log", FILE_LOG_SCHEMA,
+                 [("fl-1", "spark-run", "a.xlsx", "t1", True, "[]", "[]", 2, 2, 0, "COMPLETED", None),
+                  ("fl-2", "spark-run", "b.xlsx", "t1", False, "[]", "[]", 1, 0, 1, "ERROR", "x")],
+                 ("created_at",))
+    spark_append("execution_runs", RUN_SCHEMA,
+                 [("spark-run", None, None, "PARTIAL", 2, 3, 2, 0, 0, 1, "", "12.5", None)],
+                 ("finished_at", "created_at"))
+    run = aw.start_run()
+    aw.log_files(run, [{"file_name": "b.xlsx", "file_modified_time": "t1", "rows_total": 1},
+                       {"file_name": "c.xlsx", "file_modified_time": "t2", "status": "ERROR",
+                        "error_message": "bad"}])
+    aw.finish_run(run, {"status": "PARTIAL", "total_files": 2, "output_total_amount": "1.50"})
+    t1 = datetime.now(timezone.utc)
+    for t in ("execution_runs", "file_log"):
+        (base / t / ".part-00000000-0000.parquet").write_bytes(b"PAR1 half-written")
+
+    con = duckdb.connect()
+    con.execute("SET TimeZone = 'UTC'")
+    names = {"execution_runs": [f.name for f in RUN_SCHEMA] + ["created_at"],
+             "file_log": [f.name for f in FILE_LOG_SCHEMA] + ["created_at"]}
+
+    def duck_rows(t):  # Python's glob, like Spark, skips dot files
+        cols = ", ".join(f"epoch_us({c})" if c in _TIMESTAMPS else c for c in names[t])
+        files = sorted(glob.glob(os.path.join(base, t, "*.parquet")))
+        return sorted(con.execute(f"SELECT {cols} FROM read_parquet(?)", [files]).fetchall(),
+                      key=repr)
+
+    def spark_rows(t):
+        df = aw.table(t)
+        return sorted((tuple(r) for r in df.select(*[
+            F.unix_micros(c) if c in _TIMESTAMPS else c for c in names[t]]).collect()), key=repr)
+
+    before = {}
+    for t in names:
+        assert {f.name: f.dataType for f in aw.table(t).schema if f.name in _TIMESTAMPS} == \
+            {c: T.TimestampType() for c in _TIMESTAMPS if c in names[t]}
+        for f in _append_dir_data_files(str(base / t)):  # each writer's files alone, too
+            assert spark.read.parquet(str(base / t / f)).schema["created_at"].dataType \
+                == T.TimestampType()
+        before[t] = spark_rows(t)
+        assert before[t] == duck_rows(t)
+        assert {r[1 if t == "file_log" else 0] for r in before[t]} == {"spark-run", run}
+        micros = [v for r in before[t] for c, v in zip(names[t], r) if c in _TIMESTAMPS and v]
+        assert all(t0.timestamp() * 1e6 - 1 <= v <= t1.timestamp() * 1e6 + 1 for v in micros)
+
+    done = con.execute(
+        "SELECT DISTINCT file_name, file_modified_time FROM read_parquet(?) "
+        "WHERE status = 'COMPLETED'",
+        [sorted(glob.glob(os.path.join(base, "file_log", "*.parquet")))]).fetchall()
+    assert aw.completed_files() == set(done) == {("a.xlsx", "t1"), ("b.xlsx", "t1")}
+
+    out = aw.compact(target_files=1)
+    for t in names:
+        assert out[t]["compacted"] and len(_append_dir_data_files(str(base / t))) == 1
+        assert spark_rows(t) == duck_rows(t) == before[t]
+    assert aw.completed_files() == set(done)
 
 
 def test_staged_publish_and_rollback(spark, tmp_path):
