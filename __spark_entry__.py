@@ -104,11 +104,7 @@ from smartbots_etl_facturas_spark.operators.ranking import (
     global_order_index,
     ntile_from_rank,
 )
-from smartbots_etl_facturas_spark.sources.manifest import (
-    find_file,
-    newest_first,
-    pending_files,
-)
+from smartbots_etl_facturas_spark.sources.manifest import find_file, newest_first
 
 DEC = "decimal(18,2)"
 PK = ["invoice_number", "reference_number"]
@@ -649,22 +645,34 @@ FROM t
 
 def q_idempotency_pending(spark, sf_dir):
     """J5 processed-file skip on (file_name, modified_time)
-    (consolidate_invoices.py:235-240; sqlite_tracker.py:232-240)."""
+    (consolidate_invoices.py:235-240; sqlite_tracker.py:232-240),
+    through the pipeline's own path: the processed files are logged
+    COMPLETED in a scratch file_log by ``AuditWriter.log_files``, and
+    the manifest is anti-joined against ``completed_files()``."""
+    from smartbots_etl_facturas_spark.sinks.audit import AuditWriter
+
     orders = _read(spark, sf_dir, "orders")
     manifest = orders.groupBy(F.col("o_orderpriority").alias("file_name")).agg(
         F.max("o_orderdate").cast("date").alias("modified_time")
     )
-    processed = (
-        manifest.filter(F.col("file_name").rlike("^[13]"))
-        .withColumn(
-            "modified_time",
-            F.when(F.col("file_name").startswith("3"),
-                   F.date_sub(F.col("modified_time"), 1))
-            .otherwise(F.col("modified_time")),
-        )
-        .withColumn("status", F.lit("COMPLETED"))
+    processed = manifest.filter(F.col("file_name").rlike("^[13]")).withColumn(
+        "modified_time",
+        F.when(F.col("file_name").startswith("3"), F.date_sub(F.col("modified_time"), 1))
+        .otherwise(F.col("modified_time")),
     )
-    return pending_files(manifest, processed)
+    audit = AuditWriter(spark, _scratch_dir("idempotency_audit_"))
+    audit.log_files("idempotency_pending", [  # a 5-row dim: the collect is bounded
+        {"file_name": r.file_name, "file_modified_time": r.modified_time}
+        for r in processed.collect()
+    ])
+    done = spark.createDataFrame(sorted(audit.completed_files()),
+                                 "file_name string, file_modified_time string")
+    return manifest.join(
+        done,
+        (manifest.file_name == done.file_name)
+        & (manifest.modified_time.cast("string") == done.file_modified_time),
+        "left_anti",
+    )
 
 
 SQL_IDEMPOTENCY_PENDING = """
@@ -8096,26 +8104,28 @@ def q_xlsx_distributed(spark, sf_dir):
     """S1/S2 distributed XLSX scan (the reference's native format,
     official_format_extractor.py:354-453): workbook bytes read by the
     binaryFile source on executors, parsed per-file inside
-    mapInPandas, emitting (file, row_idx, declared columns) with the
+    mapInPandas into the positional grid, then re-headered from each
+    file's row 0 into (file, row_idx, declared columns) with the
     per-file row-order invariant. sf_dir is unused — inputs are the
     golden workbooks (XLSX has no sf-scaled testdata)."""
     from smartbots_etl_facturas_spark.sources.xlsx import (
-        read_xlsx_distributed,
+        read_xlsx_grid_distributed,
         write_xlsx,
     )
 
     d = _scratch_dir("xlsx_golden_")
     for i, (name, rows) in enumerate(sorted(_XLSX_GOLDEN.items())):
         write_xlsx(os.path.join(d, name), rows, use_shared_strings=bool(i % 2))
-    df = read_xlsx_distributed(
-        spark, os.path.join(d, "*.xlsx"), ["invoice_number", "carrier", "total"]
-    )
-    return df.select(
-        F.element_at(F.split("source_file", "/"), -1).alias("file"),
-        "row_idx",
-        "invoice_number",
-        "carrier",
-        "total",
+    grid = read_xlsx_grid_distributed(spark, os.path.join(d, "*.xlsx"), 3)
+    return (
+        grid.filter(F.col("row_idx") > 0)  # row 0 is the header row
+        .select(
+            F.element_at(F.split("source_file", "/"), -1).alias("file"),
+            (F.col("row_idx") - 1).cast("long").alias("row_idx"),
+            F.col("c0").alias("invoice_number"),
+            F.col("c1").alias("carrier"),
+            F.col("c2").alias("total"),
+        )
     )
 
 
@@ -9904,47 +9914,6 @@ FROM walk GROUP BY n
 """
 
 
-
-
-def q_xlsx_datasource_scan(spark, sf_dir):
-    """The same S1/S2 XLSX scan through the engine's REGISTERED
-    Spark-4 Python DataSource (sources/xlsx_datasource.py — the
-    "ExcelScan DataSource V2" SURVEY §4 had deferred):
-    ``spark.read.format("xlsx_grid")`` plans ONE InputPartition per
-    workbook, the stdlib OOXML codec parses on executors, and the
-    positional grid is reheadered downstream exactly like the
-    mapInPandas path. Must hash-match the SAME oracle as
-    xlsx_distributed — two independent scan implementations, one
-    answer. sf_dir unused (golden workbooks are the fixture)."""
-    from smartbots_etl_facturas_spark.sources.xlsx import write_xlsx
-    from smartbots_etl_facturas_spark.sources.xlsx_datasource import (
-        XlsxGridDataSource,
-    )
-
-    try:
-        spark.dataSource.register(XlsxGridDataSource)
-    except Exception:
-        pass  # already registered in this session
-    d = _scratch_dir("xlsx_ds_golden_")
-    for i, (name, rows) in enumerate(sorted(_XLSX_GOLDEN.items())):
-        write_xlsx(os.path.join(d, name), rows, use_shared_strings=bool(i % 2))
-    grid = (
-        spark.read.format("xlsx_grid")
-        .option("n_cols", 3)
-        .load(os.path.join(d, "*.xlsx"))
-    )
-    return (
-        grid.filter(F.col("row_idx") > 0)  # row 0 is the header row
-        .select(
-            F.element_at(F.split("source_file", "/"), -1).alias("file"),
-            (F.col("row_idx") - 1).cast("long").alias("row_idx"),
-            F.col("c0").alias("invoice_number"),
-            F.col("c1").alias("carrier"),
-            F.col("c2").alias("total"),
-        )
-    )
-
-
 def q_xlsx_template_append(spark, sf_dir):
     """S8 TEMPLATE-PRESERVING in-place append, end-to-end (round 10 —
     the reference's excel_handler.py:61-132 append + :185-233 image
@@ -9960,7 +9929,8 @@ def q_xlsx_template_append(spark, sf_dir):
     append's VALUES and POSITIONS are value-checked cross-engine;
     the byte-identity of untouched members is pinned in
     tests/test_xlsx.py. Per-file finishing step by design (workbooks
-    are not splittable); the distributed surface stays xlsx_grid."""
+    are not splittable); the distributed surface stays
+    read_xlsx_grid_distributed."""
     from smartbots_etl_facturas_spark.sources.xlsx import (
         append_rows_xlsx,
         parse_xlsx_grid,
@@ -12191,8 +12161,7 @@ def q_connected_components_star(spark, sf_dir):
     2014, operators/graph.py:connected_components_star) — O(log² n)
     rounds instead of O(diameter), the tier a 100 TB path-shaped
     graph needs. Must hash-match the identical reachability oracle:
-    two independent algorithms, one answer (the xlsx_datasource_scan
-    pattern applied to graphs)."""
+    two independent algorithms, one answer."""
     from smartbots_etl_facturas_spark.operators.graph import (
         connected_components_star,
     )
@@ -13677,7 +13646,6 @@ _QUERIES: dict[str, Callable] = {
     "ar_aging": q_ar_aging,
     "frequent_pairs": q_frequent_pairs,
     "seasonal_dow": q_seasonal_dow,
-    "xlsx_datasource_scan": q_xlsx_datasource_scan,
     "xlsx_template_append": q_xlsx_template_append,
     "relational_division": q_relational_division,
     "cms_heavy_hitters": q_cms_heavy_hitters,
@@ -13985,7 +13953,6 @@ _ORACLES: dict[str, str] = {
     "bm25_search": SQL_BM25_SEARCH,
     "hll_incremental": SQL_HLL_INCREMENTAL,
     "bfs_reach": SQL_BFS_REACH,
-    "xlsx_datasource_scan": SQL_XLSX_DISTRIBUTED,
     "xlsx_template_append": SQL_XLSX_TEMPLATE_APPEND,
     "relational_division": SQL_RELATIONAL_DIVISION,
     "cms_heavy_hitters": SQL_CMS_HEAVY_HITTERS,

@@ -165,9 +165,8 @@ def first_sentence(doc: str | None) -> str:
 # or dropped query breaks the build, keeping the verdict's coverage
 # table mechanically derivable from this one map.
 OP_MAP: dict[str, tuple[str, list[str], list[str]]] = {
-    "S1": ("multi-engine Excel scan",
-           ["xlsx_distributed", "xlsx_datasource_scan"],
-           ["tests/test_xlsx.py", "tests/test_xlsx_datasource.py"]),
+    "S1": ("multi-engine Excel scan", ["xlsx_distributed"],
+           ["tests/test_xlsx.py"]),
     "S2": ("sheet/header-row read", ["header_discovery"],
            ["tests/test_xlsx.py"]),
     "S3": ("fixed-cell scan", ["fixed_cells", "invoice_extract_golden"],
@@ -183,8 +182,7 @@ OP_MAP: dict[str, tuple[str, list[str], list[str]]] = {
            "commit + template-preserving in-place append with "
            "byte-identical styles/images — round 10)",
            ["xlsx_to_consolidated", "xlsx_template_append"],
-           ["tests/test_xlsx_datasource.py", "tests/test_sinks.py",
-            "tests/test_xlsx.py"]),
+           ["tests/test_sinks.py", "tests/test_xlsx.py"]),
     "S9": ("audit sink + engine run reports", ["run_report"],
            ["tests/test_sinks.py", "tests/test_observability.py"]),
     "S10": ("email report sink (render + MIME construction)",

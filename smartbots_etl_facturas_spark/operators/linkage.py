@@ -129,7 +129,9 @@ def prefix_candidate_pairs(
 ) -> DataFrame:
     """The CANDIDATE stage of the similarity join, exposed on its own
     so pruning effectiveness is measurable (candidate count vs the
-    |L|·|R| pair space — see scripts/ppjoin_pruning_experiment.py):
+    |L|·|R| pair space; on a Zipfian-vocabulary corpus at threshold
+    0.6, candidates fell from 3.72 % to 0.54 % of the pair space from
+    2k to 32k docs, and every seeded pair was still found — PERF.md):
     deduplicated (left_id, right_id, n_left_id, n_right_id) pairs
     surviving the lossless prefix filter + PPJoin length filter.
     ``jaccard_similarity_join`` = this + exact verification."""
@@ -348,7 +350,9 @@ def _edit_candidates(
 ) -> DataFrame:
     """Candidate pairs ``(a_id, b_id)`` (a_id < b_id, superset of all
     true pairs, may repeat) — the skew-aware candidate stage, exposed
-    for the pruning experiment (scripts/edit_skew_experiment.py).
+    so its pruning is measurable (on an adversarial shared-prefix
+    corpus at 8× scale, 14.4B naive candidates became 65M refined
+    ones, a 221× cut — PERF.md).
     Ids only: the strings re-attach downstream after the id-level
     dedup (guide 2.3), so no candidate shuffle carries payload.
     See edit_distance_join."""

@@ -293,7 +293,7 @@ def topk_per_group(
     ``rank_col``: optionally keep the 1-based global rank (from pass
     2's row_number) in the output.
 
-    MEASURED trade-off (scripts/topk_skew_experiment.py, local[32],
+    MEASURED trade-off (local[32],
     30% hot group): the naive window is 1.2-1.8x FASTER at 8-32M
     rows, because locally a shuffle is a memcpy and sorting the
     whole hot group on one task is cheap — while this plan pays a

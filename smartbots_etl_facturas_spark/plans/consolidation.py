@@ -211,15 +211,18 @@ def consolidate(
                     allowMissingColumns=True,
                 ).withColumn("__first", F.min("__pos").over(w))
                 own = F.col("__pos") == F.col("__first")
+                amount = F.col("total_amount").cast(AMOUNT)
                 result = won.withColumn(
-                    "total_amount", F.sum(F.when(own, F.col("total_amount").cast(AMOUNT))).over(w)
+                    "total_amount", F.sum(F.when(own, amount)).over(w)
                 ).filter(F.col("__pos") >= 0)
-                # owned rows per position, master (-1) included: the published rows
-                inserts = won.filter(own).groupBy("__pos").agg(
-                    F.count("*").alias("n_inserted"),
-                    F.sum(F.col("total_amount").cast(AMOUNT)).alias("inserted_total"))
+                # per position, master (-1) included: the owned rows (the published
+                # ones) and the sum of all rows (reconcile's source side, exact)
+                sums = won.groupBy("__pos").agg(
+                    F.count(F.when(own, 1)).alias("n_inserted"),
+                    F.sum(F.when(own, amount)).alias("inserted_total"),
+                    F.sum(amount).alias("valid_total"))
                 recs = reconcile(keep(valid), result, PK, amount_type=AMOUNT, by="__pos")
-                stats = counts.join(inserts, "__pos", "full").join(recs, "__pos", "left")
+                stats = counts.join(sums, "__pos", "full").join(recs, "__pos", "left")
                 rows = {r["__pos"]: r for r in stats.collect()}
                 bad = [p for p in live() if p in rows and rows[p].reconciled is False]
                 if not bad:
@@ -243,6 +246,7 @@ def consolidate(
             fail(p, exc)
 
     committed = live()
+    source_total = Decimal(0)
     for p in unfailed():
         if p not in committed:  # a repeat of a file this round completed
             report.files_skipped += 1
@@ -256,6 +260,8 @@ def consolidate(
         report.total_records += n_total
         report.inserted += r.get("n_inserted") or 0
         report.validation_errors += n_errors
+        source_total += r.get("valid_total") or 0
+    report.source_total = str(source_total)
 
     # A5 — status derivation (consolidate_invoices.py:140-145)
     report.status = ("NO_FILES" if not files else "SUCCESS" if not report.files_error
@@ -291,7 +297,8 @@ def consolidate(
     audit.finish_run(run_uuid, {
         "status": report.status, "total_files": report.total_files,
         "total_records": report.total_records, "inserted": report.inserted,
-        "errors": report.validation_errors, "output_total_amount": report.output_total,
+        "errors": report.validation_errors, "source_total_amount": report.source_total,
+        "output_total_amount": report.output_total,
         "message": "; ".join(report.messages) or None,
     })
     return report

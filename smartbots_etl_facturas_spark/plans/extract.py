@@ -111,12 +111,13 @@ def _cell_ref(ref: str) -> tuple[int, str]:
 def parse_sheet_date(col: Column) -> Column:
     """F2 multi-format date parse with an F3 Excel-serial fallback.
 
-    Parse engines disagree on date-STYLED numeric cells: the stdlib
-    OOXML codec surfaces the raw serial string (it cannot see number
-    formats), openpyxl(data_only) a ``YYYY-MM-DD HH:MM:SS`` string,
-    calamine an ISO date — so the extractor accepts all three. Serials
-    are accepted only within 1990-01-01..2100-01-01 (32874..73051), so
-    ordinary small amounts cannot masquerade as dates."""
+    A date cell reaches the grid as the raw serial string when it is a
+    date-STYLED number (the stdlib OOXML codec cannot see number
+    formats), or as text in whatever form the workbook's writer used,
+    e.g. ``YYYY-MM-DD HH:MM:SS`` or an ISO date — so the extractor
+    accepts all three. Serials are accepted only within
+    1990-01-01..2100-01-01 (32874..73051), so ordinary small amounts
+    cannot masquerade as dates."""
     s = F.trim(col.cast("string"))
     serial = s.try_cast("int")
     serial_ok = serial.isNotNull() & (serial >= 32874) & (serial <= 73051)

@@ -1,4 +1,3 @@
-from smartbots_etl_facturas_spark.sources.manifest import pending_files
 from smartbots_etl_facturas_spark.sources.readers import with_row_idx
 
-__all__ = ["pending_files", "with_row_idx"]
+__all__ = ["with_row_idx"]

@@ -1,37 +1,16 @@
-"""S5/S6/J5 — file-manifest discovery and idempotent-ingestion skip.
+"""S5/S6 — file-manifest lookup and listing.
 
 The reference lists Drive files newest-first
-(oauth_google_drive_adapter.py:96-111) and skips any file whose
-``(file_name, modified_time)`` already has a COMPLETED entry in the
-``file_log`` audit table (consolidate_invoices.py:235-240,
-sqlite_tracker.py:232-240). A re-listed file with a *different*
-modified_time must be reprocessed (tests/unit/test_sqlite_tracker.py:117-133).
-
-This is exactly the Structured Streaming file-source checkpoint
-semantics expressed as a batch anti-join; streaming/ingest.py carries
-the streaming twin.
+(oauth_google_drive_adapter.py:96-111) and finds one by exact name.
+The J5 idempotent skip (a ``(file_name, modified_time)`` with a
+COMPLETED ``file_log`` entry is not processed again) is
+``sinks.audit.AuditWriter.completed_files``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MANIFEST_KEYS = ("file_name", "modified_time")
-
-
-def pending_files(
-    manifest: DataFrame,
-    processed: DataFrame,
-    keys: Sequence[str] = MANIFEST_KEYS,
-    status_col: str = "status",
-    completed_value: str = "COMPLETED",
-) -> DataFrame:
-    """J5 — manifest rows with no COMPLETED processing entry."""
-    done = processed.filter(F.col(status_col) == completed_value).select(*keys).distinct()
-    return manifest.join(done, on=list(keys), how="left_anti")
 
 
 def find_file(manifest: DataFrame, name: str, name_col: str = "file_name") -> DataFrame:

@@ -152,29 +152,3 @@ def read_json_table(spark, path: str, schema, permissive: bool = True,
         .option("columnNameOfCorruptRecord", corrupt_col)
         .json(path)
     )
-
-
-def read_xlsx_table(spark, path: str, sheet_name=0, header_row: int = 1):
-    """S1/S2 single-workbook XLSX read, driver-side (the reference's
-    per-file loop shape, official_format_extractor.py:354-453). Parses
-    via the engine chain in :mod:`.xlsx` (openpyxl -> calamine ->
-    stdlib OOXML codec, so no external Excel library is required);
-    rows get an explicit row_idx (the engine's order invariant).
-
-    For many files use :func:`.xlsx.read_xlsx_distributed` — the
-    ``binaryFile`` + ``mapInPandas`` path that parses on executors.
-    This shim exists for single-file driver-side convenience and as
-    the row-for-row correctness reference for the distributed reader.
-    """
-    from .xlsx import parse_xlsx_to_pdf
-
-    with open(path, "rb") as fh:
-        pdf = parse_xlsx_to_pdf(fh.read(), sheet_name, header_row)
-    pdf.insert(0, "row_idx", range(len(pdf)))
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [T.StructField("row_idx", T.LongType(), False)]
-        + [T.StructField(str(c), T.StringType(), True) for c in pdf.columns if c != "row_idx"]
-    )
-    return spark.createDataFrame(pdf, schema)

@@ -3,14 +3,12 @@ format; official_format_extractor.py:354-453, excel_handler.py:40-59).
 
 The reference reads one workbook at a time on a single process through
 an engine fallback chain (fastexcel -> pandas+calamine -> openpyxl).
-Here the same chain exists per *cell parse engine* (openpyxl ->
-python-calamine -> a stdlib zip+XML codec that is always available),
-but the I/O shape is Spark-native: ``spark.read.format("binaryFile")``
-lists and reads the workbook bytes on EXECUTORS, and ``mapInPandas``
-parses each file inside an Arrow batch. The driver never touches
-workbook content, so ingesting 100k workbooks parallelizes across the
-cluster instead of serializing on one pandas loop — the fix for the
-round-1 driver-side shim (VERDICT.md "What's wrong" #2).
+Here one reader, :func:`read_xlsx_grid_distributed`, replaces the
+chain: ``spark.read.format("binaryFile")`` lists and reads the workbook
+bytes on EXECUTORS, and ``mapInPandas`` parses each file with a stdlib
+zip+XML codec inside an Arrow batch. The driver never touches workbook
+content, so ingesting 100k workbooks parallelizes across the cluster
+instead of serializing on one pandas loop.
 
 Order invariant: every emitted row carries ``source_file`` and a
 0-based per-file ``row_idx`` (sheet row order), feeding the
@@ -21,8 +19,7 @@ XLSX is ECMA-376 OOXML: a zip of XML parts. The stdlib codec reads
 ``xl/sharedStrings.xml`` for the shared-string table, and the sheet
 XML's ``<row r=..><c r=.. t=..><v>``/``<is>`` cells. Cells are emitted
 as strings (typing is the projection layer's job — F1/F2/F3 parse
-money/dates/serials downstream), which also makes output identical
-across parse engines.
+money/dates/serials downstream).
 
 Scale notes: ``binaryFile`` is non-splittable (one row per workbook —
 correct, a zip can't be split); small files are packed into partitions
@@ -50,7 +47,7 @@ _DOC_REL = "{http://schemas.openxmlformats.org/officeDocument/2006/relationships
 
 
 # ---------------------------------------------------------------------------
-# stdlib parse engine (always available)
+# stdlib OOXML codec
 # ---------------------------------------------------------------------------
 
 def _col_ord(cell_ref: str) -> int:
@@ -179,9 +176,9 @@ def grid_rows(content: bytes, sheet_name=0) -> list[tuple[int, list]]:
     :func:`parse_xlsx_grid`, guarded per workbook: a workbook that does
     not parse yields ONE marker row ``(-1, ["<ExcType>: <msg>"])``
     instead of raising, so one corrupt file cannot fail the scan of
-    the others. Both grid readers (``read_xlsx_grid_distributed`` and
-    ``xlsx_datasource``) emit rows through here; ``extract_invoice_files``
-    turns a marker into an ``unreadable workbook`` error row."""
+    the others. :func:`read_xlsx_grid_distributed` emits rows through
+    here; ``extract_invoice_files`` turns a marker into an
+    ``unreadable workbook`` error row."""
     try:
         grid = parse_xlsx_grid(content, sheet_name)
     except Exception as exc:  # noqa: BLE001 - any parse failure is the file's
@@ -189,149 +186,9 @@ def grid_rows(content: bytes, sheet_name=0) -> list[tuple[int, list]]:
     return list(enumerate(grid))
 
 
-def parse_xlsx_to_pdf(content: bytes, sheet_name=0, header_row: int = 1):
-    """Workbook bytes -> pandas DataFrame of string cells, via the
-    engine chain openpyxl -> python-calamine -> stdlib codec (the
-    reference's S1 fallback chain, re-pointed at engines that may
-    exist here). All engines normalize to the stdlib's canonical
-    string form so results are engine-independent.
-
-    ``header_row`` is 1-indexed, matching the reference's
-    ``OpenpyxlExcelHandler.read`` contract (excel_handler.py:40-59).
-    """
-    import pandas as pd
-
-    grid = None
-    try:  # preferred engines, when the environment has them
-        import openpyxl  # noqa: F401
-
-        wb = openpyxl.load_workbook(io.BytesIO(content), read_only=True, data_only=True)
-        ws = (
-            wb.worksheets[sheet_name]
-            if isinstance(sheet_name, int) and 0 <= sheet_name < len(wb.worksheets)
-            else (wb[sheet_name] if sheet_name in wb.sheetnames else wb.worksheets[0])
-        )
-        grid = [[_canon_py(v) for v in row] for row in ws.iter_rows(values_only=True)]
-    except ImportError:
-        try:
-            from python_calamine import CalamineWorkbook
-
-            wb = CalamineWorkbook.from_filelike(io.BytesIO(content))
-            names = wb.sheet_names
-            name = (
-                names[sheet_name]
-                if isinstance(sheet_name, int) and 0 <= sheet_name < len(names)
-                else (sheet_name if sheet_name in names else names[0])
-            )
-            grid = [[_canon_py(v) for v in row] for row in wb.get_sheet_by_name(name).to_python()]
-        except ImportError:
-            grid = parse_xlsx_grid(content, sheet_name)
-
-    if len(grid) < header_row:
-        return pd.DataFrame()
-    header = grid[header_row - 1]
-    cols = [h if h is not None else f"col{i}" for i, h in enumerate(header)]
-    # duplicate header names get pandas-style suffixes ('Monto',
-    # 'Monto.1', ...) — a dict comprehension keyed on the raw name
-    # would silently DROP all but the right-most duplicate column
-    seen: dict[str, int] = {}
-    uniq = []
-    for c in cols:
-        n = seen.get(c, 0)
-        seen[c] = n + 1
-        uniq.append(c if n == 0 else f"{c}.{n}")
-    data = grid[header_row:]
-    return pd.DataFrame(
-        {c: [row[i] if i < len(row) else None for row in data] for i, c in enumerate(uniq)},
-        dtype=object,
-    )
-
-
-def _canon_py(v) -> str | None:
-    """Typed engine value -> the stdlib codec's canonical string."""
-    if v is None or (isinstance(v, str) and v == ""):
-        return None
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, int):
-        return str(v)
-    if isinstance(v, float):
-        return str(int(v)) if v.is_integer() else repr(v)
-    return str(v)
-
-
 # ---------------------------------------------------------------------------
 # distributed reader
 # ---------------------------------------------------------------------------
-
-def xlsx_output_schema(columns: list[str]) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("source_file", T.StringType(), False),
-            T.StructField("row_idx", T.LongType(), False),
-        ]
-        + [T.StructField(c, T.StringType(), True) for c in columns]
-    )
-
-
-def read_xlsx_distributed(
-    spark,
-    path: str,
-    columns: list[str],
-    sheet_name=0,
-    header_row: int = 1,
-    strict: bool = True,
-) -> DataFrame:
-    """Executor-side XLSX scan: ``binaryFile`` source (workbook bytes
-    read where the task runs) + per-file parse inside ``mapInPandas``.
-
-    ``columns`` is the declared schema (config-as-schema, the
-    reference's expected_columns contract, config.py:34-46); with
-    ``strict`` a file missing any declared column fails the job with
-    the U2 SchemaValidationError message shape. Extra columns are
-    pruned. Output: (source_file, row_idx, *columns) all-string —
-    downstream projections type them (F1/F2/F3).
-    """
-    binary = spark.read.format("binaryFile").load(path).select("path", "content")
-    schema = xlsx_output_schema(columns)
-    # Executor workers may not have the package importable (driver
-    # launched from another cwd); inject its root before the import —
-    # the local-mode stand-in for shipping the package via --py-files.
-    pkg_root = _PKG_ROOT
-
-    def _parse(batches: Iterator) -> Iterator:
-        import sys
-
-        if pkg_root not in sys.path:
-            sys.path.insert(0, pkg_root)
-        import pandas as pd
-
-        from smartbots_etl_facturas_spark.sources.xlsx import parse_xlsx_to_pdf
-
-        for pdf in batches:
-            for path_val, content in zip(pdf["path"], pdf["content"]):
-                sheet = parse_xlsx_to_pdf(bytes(content), sheet_name, header_row)
-                if sheet.empty and len(sheet.columns) == 0:
-                    # blank/stub workbook: an empty extraction, not a
-                    # schema violation — strict mode must not let one
-                    # empty file among thousands abort the whole scan
-                    continue
-                missing = sorted(c for c in columns if c not in sheet.columns)
-                if missing and strict:
-                    raise ValueError(
-                        f"schema mismatch in {path_val}: missing={missing} "
-                        f"extra={sorted(set(sheet.columns) - set(columns))}"
-                    )
-                out = {
-                    "source_file": [path_val] * len(sheet),
-                    "row_idx": range(len(sheet)),
-                }
-                for c in columns:
-                    out[c] = sheet[c] if c in sheet.columns else [None] * len(sheet)
-                yield pd.DataFrame(out)
-
-    return binary.mapInPandas(_parse, schema)
-
 
 def read_xlsx_grid_distributed(
     spark,
@@ -342,15 +199,16 @@ def read_xlsx_grid_distributed(
     """Executor-side RAW-GRID XLSX scan: ``binaryFile`` + per-file
     parse into the positional cell-grid shape
     ``(source_file, row_idx, c0..c{n_cols-1})`` all-string — the input
-    contract of :mod:`..plans.extract`. Unlike
-    :func:`read_xlsx_distributed` no header row is assumed: header
+    contract of :mod:`..plans.extract`. No header row is assumed: header
     DISCOVERY and format DETECTION happen downstream as set-based
     dataflow (``extract_invoice_files``), so many files with different
     layouts go through ONE plan with no driver-side per-file loop.
 
     ``n_cols`` pads/truncates every sheet to a fixed grid width (the
     static schema Spark needs); size it to the widest expected layout.
-    A workbook that does not parse becomes one marker row
+    ``sheet_name`` picks the sheet by name or 0-based index; an unknown
+    one falls back to the first sheet (the reference's S2 rule). A
+    workbook that does not parse becomes one marker row
     (``row_idx = -1``, ``c0`` = the error; see :func:`grid_rows`).
     """
     binary = spark.read.format("binaryFile").load(path).select("path", "content")
@@ -359,6 +217,9 @@ def read_xlsx_grid_distributed(
          T.StructField("row_idx", T.LongType(), False)]
         + [T.StructField(f"c{i}", T.StringType(), True) for i in range(n_cols)]
     )
+    # Executor workers may not have the package importable (driver
+    # launched from another cwd); inject its root before the import —
+    # the local-mode stand-in for shipping the package via --py-files.
     pkg_root = _PKG_ROOT
 
     def _parse(batches: Iterator) -> Iterator:
@@ -725,8 +586,8 @@ def append_rows_xlsx(
     carry attributes.
 
     Scale note: one workbook is one driver/task-local file (workbooks
-    are not splittable); the DISTRIBUTED surface stays the xlsx_grid
-    datasource — this function is the per-file finishing step the
+    are not splittable); the DISTRIBUTED surface stays
+    :func:`read_xlsx_grid_distributed` — this function is the per-file finishing step the
     reference's submission flow needs, O(workbook size) I/O.
     """
     rows = list(rows)

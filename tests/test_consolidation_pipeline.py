@@ -180,6 +180,12 @@ def _completed_inserts(audit):
     return dict(log.join(fl, "file_log_id").groupBy("file_name").count().collect())
 
 
+# P9 row validity, as DuckDB SQL over the inbox columns
+VALID_SQL = """trim(invoice_number) <> '' AND trim(reference_number) <> ''
+    AND trim(carrier_name) <> '' AND total_amount >= 0
+    AND abs(total_amount - (net_amount + tax_amount)) <= 1"""
+
+
 def _oracle(inbox):
     """DuckDB insert-only consolidation of ``inbox`` = [(name, rows)]
     in commit order into an empty master: (master rows, INSERT count
@@ -194,10 +200,7 @@ def _oracle(inbox):
 CREATE TABLE inserted AS
 SELECT * FROM (SELECT *, row_number() OVER (
     PARTITION BY invoice_number, reference_number ORDER BY pos, row_idx) AS k
-  FROM inbox
-  WHERE trim(invoice_number) <> '' AND trim(reference_number) <> ''
-    AND trim(carrier_name) <> '' AND total_amount >= 0
-    AND abs(total_amount - (net_amount + tax_amount)) <= 1)
+  FROM inbox WHERE """ + VALID_SQL + """)
 WHERE k = 1""")
     master = set(con.execute("SELECT invoice_number, reference_number, carrier_name, "
                              "total_amount FROM inserted").fetchall())
@@ -256,30 +259,65 @@ def test_round_equals_sequential_loop(spark, env, tmp_path):
     assert _completed_inserts(seq_audit) == _completed_inserts(audit)
 
 
+# The round of test_round_equals_sequential_loop: f1 re-sends the
+# master's M-1 with its total off by 50, so it fails reconciliation.
+RECONCILE_SEED = [(0, "M-1", "R-1", "TransCo", 100.0, 0.0, 100.0)]
+RECONCILE_ROUND = [("f1.xlsx", [(0, "M-1", "R-1", "TransCo", 150.0, 0.0, 150.0),
+                                (1, "P-1", "R-1", "TransCo", 10.0, 0.0, 10.0)]),
+                   ("f2.xlsx", [(0, "P-1", "R-1", "TransCo", 20.0, 0.0, 20.0),
+                                (1, "Q-1", "R-1", "TransCo", 5.0, 0.0, 5.0)]),
+                   ("f3.xlsx", [(0, "S-1", "R-1", "TransCo", 7.0, 0.0, 7.0),
+                                (1, "M-1", "R-1", "TransCo", 100.0, 0.0, 100.0)])]
+
+
+def _reconcile_round(spark, env):
+    """Seed the master, run RECONCILE_ROUND as one round; returns its
+    report and its finish_run row."""
+    audit, base = env
+    consolidate(spark, [("m.xlsx", "t0", _file(spark, RECONCILE_SEED))], base, audit)
+    report = consolidate(spark, [(n, "t1", _file(spark, r)) for n, r in RECONCILE_ROUND],
+                         base, audit)
+    assert report.status == "PARTIAL" and report.files_error == 1
+    [finish] = audit.table("execution_runs").filter(F.col("status") == "PARTIAL").collect()
+    return report, finish
+
+
 def test_round_output_total_matches_published_master(spark, env):
-    """The round of test_round_equals_sequential_loop, where f1 fails
-    reconciliation: RunReport.output_total and the finish_run row's
+    """RunReport.output_total and the finish_run row's
     output_total_amount both equal DuckDB's sum(total_amount) over the
     published master's files."""
-    seed = [(0, "M-1", "R-1", "TransCo", 100.0, 0.0, 100.0)]
-    inbox = [("f1.xlsx", [(0, "M-1", "R-1", "TransCo", 150.0, 0.0, 150.0),
-                          (1, "P-1", "R-1", "TransCo", 10.0, 0.0, 10.0)]),
-             ("f2.xlsx", [(0, "P-1", "R-1", "TransCo", 20.0, 0.0, 20.0),
-                          (1, "Q-1", "R-1", "TransCo", 5.0, 0.0, 5.0)]),
-             ("f3.xlsx", [(0, "S-1", "R-1", "TransCo", 7.0, 0.0, 7.0),
-                          (1, "M-1", "R-1", "TransCo", 100.0, 0.0, 100.0)])]
-    audit, base = env
-    consolidate(spark, [("m.xlsx", "t0", _file(spark, seed))], base, audit)
-    report = consolidate(spark, [(n, "t1", _file(spark, r)) for n, r in inbox], base, audit)
-    assert report.status == "PARTIAL" and report.files_error == 1
-
-    files = glob.glob(os.path.join(base, current_version(base), "*.parquet"))
+    report, finish = _reconcile_round(spark, env)
+    files = glob.glob(os.path.join(env[1], current_version(env[1]), "*.parquet"))
     want = duckdb.connect().execute(
         "SELECT sum(total_amount) FROM read_parquet(?)", [files]).fetchone()[0]
     assert want == Decimal(132)                     # M-1 100 + P-1 20 + Q-1 5 + S-1 7
     assert Decimal(report.output_total) == want
-    finish = audit.table("execution_runs").filter(F.col("status") == "PARTIAL").collect()
-    assert [Decimal(r.output_total_amount) for r in finish] == [want]
+    assert Decimal(finish.output_total_amount) == want
+
+
+def test_round_source_total_matches_committed_valid_rows(spark, env):
+    """RunReport.source_total and the finish_run row's
+    source_total_amount both equal DuckDB's sum(total_amount) over the
+    valid, in-file-deduped rows of the files the round COMPLETED (f2
+    and f3; f1 failed reconciliation)."""
+    report, finish = _reconcile_round(spark, env)
+    done = [r.file_name for r in env[0].table("file_log").filter(
+        (F.col("status") == "COMPLETED") & (F.col("file_name") != "m.xlsx")).collect()]
+    assert sorted(done) == ["f2.xlsx", "f3.xlsx"]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE inbox (source_file VARCHAR, row_idx BIGINT, "
+                "invoice_number VARCHAR, reference_number VARCHAR, carrier_name VARCHAR, "
+                "net_amount DECIMAL(18,2), tax_amount DECIMAL(18,2), total_amount DECIMAL(18,2))")
+    con.executemany("INSERT INTO inbox VALUES (?, ?, ?, ?, ?, ?, ?, ?)",
+                    [(name, *r) for name, rows in RECONCILE_ROUND for r in rows])
+    want = con.execute("""
+SELECT sum(total_amount) FROM (SELECT *, row_number() OVER (
+    PARTITION BY source_file, invoice_number, reference_number ORDER BY row_idx) AS k
+  FROM inbox WHERE list_contains(?, source_file) AND """ + VALID_SQL + """)
+WHERE k = 1""", [done]).fetchone()[0]
+    assert want == Decimal(132)                     # f2: 20 + 5, f3: 7 + 100
+    assert Decimal(report.source_total) == want
+    assert Decimal(finish.source_total_amount) == want
 
 
 def test_publish_crash_then_rerun_reprocesses(spark, env, monkeypatch):

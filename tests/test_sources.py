@@ -7,7 +7,6 @@ from pyspark.sql import types as T
 from smartbots_etl_facturas_spark.sources.readers import (
     read_csv_table,
     read_json_table,
-    read_xlsx_table,
 )
 
 SCHEMA = T.StructType([
@@ -41,10 +40,3 @@ def test_json_lines(spark, tmp_path):
     df = read_json_table(spark, str(p), SCHEMA).cache()
     assert df.filter(F.col("_corrupt_record").isNull()).count() == 1
     assert df.filter(F.col("_corrupt_record").isNotNull()).count() == 1
-
-
-def test_xlsx_missing_file(spark, tmp_path):
-    # the shim is no longer env-gated (stdlib OOXML codec always
-    # available); a missing file is a plain FileNotFoundError
-    with pytest.raises(FileNotFoundError):
-        read_xlsx_table(spark, str(tmp_path / "x.xlsx"))

@@ -1,14 +1,11 @@
 """Distributed XLSX ingestion (S1/S2): stdlib OOXML codec + binaryFile
-+ mapInPandas executor-side parse, vs the driver-side shim."""
++ mapInPandas executor-side parse, vs the driver-side codec."""
 
-import pytest
 from pyspark.sql import functions as F
 
-from smartbots_etl_facturas_spark.sources.readers import read_xlsx_table
 from smartbots_etl_facturas_spark.sources.xlsx import (
     parse_xlsx_grid,
-    parse_xlsx_to_pdf,
-    read_xlsx_distributed,
+    read_xlsx_grid_distributed,
     write_xlsx,
 )
 
@@ -37,6 +34,10 @@ def _write_three(tmp_path):
     return [tmp_path / n for n in ("a.xlsx", "b.xlsx", "c.xlsx")]
 
 
+def _rows(df):
+    return sorted((r.source_file.split("/")[-1], r.row_idx, *r[2:]) for r in df.collect())
+
+
 def test_grid_roundtrip(tmp_path):
     p = tmp_path / "g.xlsx"
     write_xlsx(p, ROWS_A)
@@ -55,61 +56,52 @@ def test_shared_strings_and_escaping(tmp_path):
     assert grid[2][2] == "TRUE"
 
 
-def test_header_row_offset(tmp_path):
-    p = tmp_path / "h.xlsx"
-    write_xlsx(p, [["junk", None], ["junk2", "x"]] + ROWS_B)
-    pdf = parse_xlsx_to_pdf(p.read_bytes(), header_row=3)
-    assert list(pdf.columns) == ["invoice_number", "carrier", "total"]
-    assert pdf.iloc[0].tolist() == ["G-001", "NIPPON", "7"]
-
-
-def test_multi_sheet_resolution(tmp_path):
+def test_multi_sheet_resolution(spark, tmp_path):
     p = tmp_path / "m.xlsx"
     write_xlsx(p, {"Datos": ROWS_B, "Resumen": ROWS_A})
-    by_name = parse_xlsx_to_pdf(p.read_bytes(), sheet_name="Resumen")
-    assert len(by_name) == 4
-    by_idx = parse_xlsx_to_pdf(p.read_bytes(), sheet_name=0)
-    assert len(by_idx) == 1
-    # reference S2 fallback: unknown sheet -> first sheet
-    fallback = parse_xlsx_to_pdf(p.read_bytes(), sheet_name="NoExiste")
-    assert len(fallback) == 1
+    assert len(parse_xlsx_grid(p.read_bytes(), sheet_name="Resumen")) == 5
+    assert len(parse_xlsx_grid(p.read_bytes(), sheet_name=1)) == 5
+    assert len(parse_xlsx_grid(p.read_bytes(), sheet_name=0)) == 2
+    # reference S2 fallback: unknown sheet (by name or index) -> first sheet
+    assert len(parse_xlsx_grid(p.read_bytes(), sheet_name="NoExiste")) == 2
+    assert len(parse_xlsx_grid(p.read_bytes(), sheet_name=7)) == 2
+    by_name = read_xlsx_grid_distributed(spark, str(p), n_cols=3, sheet_name="Resumen")
+    assert [r.c0 for r in by_name.orderBy("row_idx").collect()] == [
+        "invoice_number", "F-001", "F-002", None, "F-003"]
+    fallback = read_xlsx_grid_distributed(spark, str(p), n_cols=3, sheet_name="NoExiste")
+    assert [r.c0 for r in fallback.orderBy("row_idx").collect()] == ["invoice_number", "G-001"]
 
 
-def test_distributed_matches_driver_shim_row_for_row(spark, tmp_path):
+def test_distributed_matches_driver_codec_row_for_row(spark, tmp_path):
     paths = _write_three(tmp_path)
-    cols = ["invoice_number", "carrier", "total"]
-    dist = read_xlsx_distributed(spark, str(tmp_path / "*.xlsx"), cols)
-    got = {
-        (r["source_file"].split("/")[-1], r["row_idx"]): tuple(r[c] for c in cols)
-        for r in dist.collect()
-    }
-    expected = {}
-    for p in paths:
-        for r in read_xlsx_table(spark, str(p)).collect():
-            expected[(p.name, r["row_idx"])] = tuple(r[c] for c in cols)
-    assert got == expected
-    assert len(got) == 4 + 1 + 2
+    dist = read_xlsx_grid_distributed(spark, str(tmp_path / "*.xlsx"), n_cols=3)
+    expected = sorted(
+        (p.name, ri, *row)
+        for p in paths
+        for ri, row in enumerate(parse_xlsx_grid(p.read_bytes()))
+    )
+    assert _rows(dist) == expected
+    assert len(expected) == 5 + 2 + 3
 
 
 def test_distributed_row_idx_restarts_per_file(spark, tmp_path):
     _write_three(tmp_path)
-    dist = read_xlsx_distributed(
-        spark, str(tmp_path / "*.xlsx"), ["invoice_number", "carrier", "total"]
-    )
+    dist = read_xlsx_grid_distributed(spark, str(tmp_path / "*.xlsx"), n_cols=3)
     mins = dist.groupBy("source_file").agg(F.min("row_idx").alias("lo")).collect()
     assert len(mins) == 3 and all(r["lo"] == 0 for r in mins)
 
 
-def test_distributed_strict_schema(spark, tmp_path):
-    write_xlsx(tmp_path / "bad.xlsx", [["other_col"], ["x"]])
-    df = read_xlsx_distributed(spark, str(tmp_path / "bad.xlsx"), ["invoice_number"])
-    with pytest.raises(Exception, match="missing"):
-        df.collect()
-    lax = read_xlsx_distributed(
-        spark, str(tmp_path / "bad.xlsx"), ["invoice_number"], strict=False
-    )
-    rows = lax.collect()
-    assert len(rows) == 1 and rows[0]["invoice_number"] is None
+def test_directory_load_row_idx_restarts_per_file(spark, tmp_path):
+    """Loading the inbox directory (not a glob) numbers each file's
+    rows 0..n-1 on its own."""
+    paths = _write_three(tmp_path)
+    dist = read_xlsx_grid_distributed(spark, str(tmp_path), n_cols=3)
+    got = {}
+    for name, ri, *_ in _rows(dist):
+        got.setdefault(name, []).append(ri)
+    assert got == {
+        p.name: list(range(len(parse_xlsx_grid(p.read_bytes())))) for p in paths
+    }
 
 
 def test_distributed_runs_in_executors_not_driver(spark, tmp_path):
@@ -117,12 +109,22 @@ def test_distributed_runs_in_executors_not_driver(spark, tmp_path):
     with no driver-side collect: assert lazily-built DataFrame exposes
     the mapInPandas node and only materializes on action."""
     _write_three(tmp_path)
-    df = read_xlsx_distributed(
-        spark, str(tmp_path / "*.xlsx"), ["invoice_number", "carrier", "total"]
-    )
+    df = read_xlsx_grid_distributed(spark, str(tmp_path / "*.xlsx"), n_cols=3)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan or "mapInPandas" in plan.lower()
-    assert df.count() == 7
+    assert df.count() == 10
+
+
+def test_corrupt_workbook_marker_row(spark, tmp_path):
+    """A workbook that does not parse is one marker row (row_idx -1,
+    c0 = the error); the good files' rows are unchanged."""
+    _write_three(tmp_path)
+    (tmp_path / "bad.xlsx").write_bytes((tmp_path / "a.xlsx").read_bytes()[:100])
+    rows = _rows(read_xlsx_grid_distributed(spark, str(tmp_path / "*.xlsx"), n_cols=3))
+    bad = [r for r in rows if r[0] == "bad.xlsx"]
+    assert bad == [("bad.xlsx", -1, "BadZipFile: File is not a zip file", None, None)]
+    assert [r for r in rows if r[0] != "bad.xlsx"] == _rows(
+        read_xlsx_grid_distributed(spark, str(tmp_path / "[abc].xlsx"), n_cols=3))
 
 
 def test_error_and_date_typed_cells_do_not_crash():
@@ -154,42 +156,18 @@ def test_error_and_date_typed_cells_do_not_crash():
     assert grid[1] == ["#DIV/0!", "2026-02-15"]
 
 
-def test_duplicate_headers_suffixed_not_dropped():
-    """Two columns with the same header keep BOTH datasets
-    (pandas-style .1 suffix), instead of silently losing the left."""
-    import tempfile, os
-
-    from smartbots_etl_facturas_spark.sources.xlsx import parse_xlsx_to_pdf, write_xlsx
-
-    with tempfile.TemporaryDirectory() as d:
-        p = os.path.join(d, "t.xlsx")
-        write_xlsx(p, {"Hoja1": [["Monto", "Monto"], ["1", "2"]]})
-        pdf = parse_xlsx_to_pdf(open(p, "rb").read())
-    assert list(pdf.columns) == ["Monto", "Monto.1"]
-    assert list(pdf["Monto"]) == ["1"] and list(pdf["Monto.1"]) == ["2"]
-
-
 def test_distributed_scan_skips_blank_workbook(spark, tmp_path):
-    """One blank workbook among many must yield zero rows, not abort
-    the strict-mode scan."""
-    from smartbots_etl_facturas_spark.sources.xlsx import (
-        read_xlsx_distributed,
-        write_xlsx,
-    )
-
-    write_xlsx(str(tmp_path / "ok.xlsx"),
-               {"Hoja1": [["A", "B"], ["1", "2"]]})
+    """One blank workbook among good ones yields zero rows and does
+    not abort the scan."""
+    write_xlsx(str(tmp_path / "ok.xlsx"), {"Hoja1": [["A", "B"], ["1", "2"]]})
     write_xlsx(str(tmp_path / "blank.xlsx"), {"Hoja1": []})
-    out = read_xlsx_distributed(spark, str(tmp_path / "*.xlsx"), ["A", "B"])
-    assert out.count() == 1
+    out = read_xlsx_grid_distributed(spark, str(tmp_path / "*.xlsx"), n_cols=2)
+    assert _rows(out) == [("ok.xlsx", 0, "A", "B"), ("ok.xlsx", 1, "1", "2")]
 
 
 # --- S8 presentation fidelity: per-column number formats --------------------
 
-from smartbots_etl_facturas_spark.sources.xlsx import (  # noqa: E402
-    read_column_formats,
-    read_xlsx_grid_distributed,
-)
+from smartbots_etl_facturas_spark.sources.xlsx import read_column_formats  # noqa: E402
 
 
 def test_column_formats_roundtrip(tmp_path):
