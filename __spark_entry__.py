@@ -67,10 +67,7 @@ from smartbots_etl_facturas_spark.sources.multimodal import extract_image_featur
 from smartbots_etl_facturas_spark.operators.asof import asof_join
 from smartbots_etl_facturas_spark.operators.skew import salted_agg
 from smartbots_etl_facturas_spark.operators.rangejoin import bucketed_range_join
-from smartbots_etl_facturas_spark.operators.reconcile import (
-    reconcile,
-    reconcile_insert_only,
-)
+from smartbots_etl_facturas_spark.operators.reconcile import reconcile
 from smartbots_etl_facturas_spark.operators.pq import cosine_topk_ivfpq
 from smartbots_etl_facturas_spark.operators.similarity import (
     cosine_topk_bruteforce,
@@ -84,6 +81,7 @@ from smartbots_etl_facturas_spark.operators.rollup import (
     status_counts,
 )
 from smartbots_etl_facturas_spark.operators.upsert import (
+    PK,
     audit_actions,
     upsert_full,
     upsert_insert_only,
@@ -94,10 +92,6 @@ from smartbots_etl_facturas_spark.functions.cleaning import (
     normalize_currency,
     strip_prefix,
 )
-from smartbots_etl_facturas_spark.sources.readers import (
-    attach_fixed_cells,
-    discover_header,
-)
 from smartbots_etl_facturas_spark.operators.validation import split_valid, with_validation
 from smartbots_etl_facturas_spark.plans.invoices import invoice_view, invoices_cte
 from smartbots_etl_facturas_spark.operators.ranking import (
@@ -107,7 +101,6 @@ from smartbots_etl_facturas_spark.operators.ranking import (
 from smartbots_etl_facturas_spark.sources.manifest import find_file, newest_first
 
 DEC = "decimal(18,2)"
-PK = ["invoice_number", "reference_number"]
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -244,17 +237,11 @@ FROM st, rt, m
 
 
 def q_reconciliation(spark, sf_dir):
-    """J3/J4/A1/A2 — zero-data-loss + amount variance (±1 exclusive).
-
-    Round-14: computed via the fused single-aggregation form
-    (operators/reconcile.py:reconcile_insert_only — algebraically
-    identical to reconcile(incoming, upsert_insert_only(...)), proof
-    in its docstring, equality pinned by tests and the oracle); the
-    composed form re-evaluated the incoming/existing subtrees twice
-    each and shuffled 5 times where the report needs 2."""
+    """J3/J4/A1/A2 — zero-data-loss + amount variance (±1 exclusive)
+    of the incoming batch against its insert-only upsert (J1)."""
     existing, incoming = _existing(spark, sf_dir), _incoming(spark, sf_dir)
-    return reconcile_insert_only(existing, incoming, PK,
-                                 amount_type="decimal(27,6)")
+    result = upsert_insert_only(existing, incoming, PK)
+    return reconcile(incoming, result, PK, amount_type="decimal(27,6)")
 
 
 SQL_RECONCILIATION = f"""
@@ -4237,7 +4224,7 @@ def q_semi_join_amounts(spark, sf_dir):
     restricted to incoming PKs before the per-carrier amount rollup."""
     existing, incoming = _existing(spark, sf_dir), _incoming(spark, sf_dir)
     result = upsert_insert_only(existing, incoming, PK)
-    subset = result.join(incoming.select(*PK).distinct(), PK, "left_semi")
+    subset = result.join(incoming.select(*PK).distinct(), list(PK), "left_semi")
     return subset.groupBy("carrier_name").agg(
         F.sum(F.col("total_amount").cast("decimal(27,6)")).cast("double").alias("subset_total"),
         F.count(F.lit(1)).alias("n_rows"),
@@ -7352,51 +7339,6 @@ GROUP BY 1
 """
 
 
-_SHEET_HEADERS = ("N° Factura", "Órdenes de Embarque", "Monto")
-
-GOLDEN_SHEET = [
-    (0, "Reporte Mensual", None, None),
-    (1, None, None, None),
-    (2, "Empresa:", "ACME Logistics", None),
-    (3, "N° Factura", "Órdenes de Embarque", "Monto"),
-    (4, "F-001", "OE-77", "1200"),
-    (5, "F-002", "OE-78", "3400"),
-    (6, "F-003", "OE-79", "560"),
-]
-
-
-def q_header_discovery(spark, sf_dir):
-    """S4 header-row discovery golden: marker row found at ordinal 3,
-    rows after it re-headered with the discovered names."""
-    raw = spark.createDataFrame(GOLDEN_SHEET, "row_idx long, c0 string, c1 string, c2 string")
-    out = discover_header(raw, _SHEET_HEADERS)
-    return out.select(
-        "row_idx",
-        F.col("N° Factura").alias("invoice_number"),
-        F.col("Órdenes de Embarque").alias("shipment_order"),
-        F.col("Monto").cast("double").alias("amount"),
-    )
-
-
-_SHEET_VALUES = ", ".join(
-    "(" + ", ".join("NULL" if v is None else repr(v) for v in row) + ")"
-    for row in GOLDEN_SHEET
-)
-
-SQL_HEADER_DISCOVERY = f"""
-WITH raw(row_idx, c0, c1, c2) AS (VALUES {_SHEET_VALUES}),
-hdr AS (
-  SELECT min(row_idx) AS h FROM raw
-  WHERE row_idx < 15
-    AND (CASE WHEN upper(trim(c0)) IN ('N° FACTURA', 'ÓRDENES DE EMBARQUE', 'MONTO') THEN 1 ELSE 0 END
-       + CASE WHEN upper(trim(c1)) IN ('N° FACTURA', 'ÓRDENES DE EMBARQUE', 'MONTO') THEN 1 ELSE 0 END
-       + CASE WHEN upper(trim(c2)) IN ('N° FACTURA', 'ÓRDENES DE EMBARQUE', 'MONTO') THEN 1 ELSE 0 END) >= 3)
-SELECT CAST(row_idx AS BIGINT) AS row_idx,
-       c0 AS invoice_number, c1 AS shipment_order, CAST(c2 AS DOUBLE) AS amount
-FROM raw, hdr WHERE row_idx > coalesce(hdr.h, 10)
-"""
-
-
 def q_fixed_cells(spark, sf_dir):
     """S3 fixed-cell scan: scalar header cells (here: the EUROPE
     region row) broadcast onto every detail row (nation) without
@@ -7407,7 +7349,7 @@ def q_fixed_cells(spark, sf_dir):
         F.col("r_name").alias("fixed_region"),
         F.col("r_regionkey").alias("fixed_regionkey"),
     )
-    return attach_fixed_cells(nation.select("n_nationkey", "n_name"), fixed)
+    return nation.select("n_nationkey", "n_name").crossJoin(F.broadcast(fixed))
 
 
 SQL_FIXED_CELLS = """
@@ -7423,8 +7365,9 @@ FROM nation n, (SELECT r_name, r_regionkey FROM region WHERE r_regionkey = 0) r
 # ordinal 10, the reference's row-11 rule). The Spark side must DETECT
 # the layout at runtime (official_format_extractor.py:111-121); the
 # oracle recomputes each sheet's filtering/parsing/derivation from the
-# same raw grid with the (known-golden) layout constants pinned —
-# header discovery itself is oracle-checked by `header_discovery`.
+# same raw grid with the (known-golden) layout constants pinned.
+# Discovery of a header away from rows 9 and 10 is pinned by
+# tests/test_extract.py.
 
 GOLDEN_MIXED_SHEET = [
     # row_idx, c0..c8 — fixed cells: C6=(5,c2) carrier, G3=(2,c6) date,
@@ -8114,9 +8057,11 @@ def q_xlsx_distributed(spark, sf_dir):
     )
 
     d = _scratch_dir("xlsx_golden_")
+    paths = []
     for i, (name, rows) in enumerate(sorted(_XLSX_GOLDEN.items())):
-        write_xlsx(os.path.join(d, name), rows, use_shared_strings=bool(i % 2))
-    grid = read_xlsx_grid_distributed(spark, os.path.join(d, "*.xlsx"), 3)
+        paths.append(os.path.join(d, name))
+        write_xlsx(paths[-1], rows, use_shared_strings=bool(i % 2))
+    grid = read_xlsx_grid_distributed(spark, paths, 3)
     return (
         grid.filter(F.col("row_idx") > 0)  # row 0 is the header row
         .select(
@@ -13749,7 +13694,6 @@ _QUERIES: dict[str, Callable] = {
     "approx_distinct": q_approx_distinct,
     "multimodal_features": q_multimodal_features,
     "audit_actions": q_audit_actions,
-    "header_discovery": q_header_discovery,
     "fixed_cells": q_fixed_cells,
     "invoice_extract_golden": q_invoice_extract_golden,
     "invoice_extract_errors": q_invoice_extract_errors,
@@ -13982,7 +13926,6 @@ _ORACLES: dict[str, str] = {
     "approx_distinct": SQL_APPROX_DISTINCT,
     "multimodal_features": SQL_MULTIMODAL_FEATURES,
     "audit_actions": SQL_AUDIT_ACTIONS,
-    "header_discovery": SQL_HEADER_DISCOVERY,
     "fixed_cells": SQL_FIXED_CELLS,
     "invoice_extract_golden": SQL_INVOICE_EXTRACT,
     "invoice_extract_errors": SQL_INVOICE_EXTRACT_ERRORS,

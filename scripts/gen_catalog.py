@@ -167,12 +167,12 @@ def first_sentence(doc: str | None) -> str:
 OP_MAP: dict[str, tuple[str, list[str], list[str]]] = {
     "S1": ("multi-engine Excel scan", ["xlsx_distributed"],
            ["tests/test_xlsx.py"]),
-    "S2": ("sheet/header-row read", ["header_discovery"],
+    "S2": ("sheet/header-row read", ["xlsx_distributed"],
            ["tests/test_xlsx.py"]),
     "S3": ("fixed-cell scan", ["fixed_cells", "invoice_extract_golden"],
            ["tests/test_extract.py"]),
-    "S4": ("header-row discovery", ["header_discovery"],
-           ["tests/test_xlsx.py"]),
+    "S4": ("header-row discovery", ["invoice_extract_golden"],
+           ["tests/test_extract.py"]),
     "S5": ("folder listing", ["manifest_listing"],
            ["tests/test_catalog.py"]),
     "S6": ("find-file-by-name", ["find_file_by_name"],

@@ -33,17 +33,21 @@ if [ -n "$round" ]; then
     python scripts/check_parity.py /root/testdata/sf0.01
 fi
 
-# the benchmark's own gate tests, then one ingest run whose ops all
-# match the DuckDB oracle (the JSON result is the last line printed)
-perfbench_gate() {
-  python -m pytest perfbench/test_gate.py -q || return 1
+# the benchmark's own gate tests, then one run per workload whose ops
+# all match the DuckDB oracle (the JSON result is the last line printed)
+perfbench_run() {
   local out
-  out="$(python perfbench/run.py --workload invoice_ingest --seed 1 --seconds 10 --trace 0)" || return 1
+  out="$(python perfbench/run.py --workload "$1" --seed 1 --seconds 10 --trace 0)" || return 1
   printf '%s\n' "$out"
   printf '%s\n' "$out" | tail -n 1 |
     python -c 'import json, sys; sys.exit(json.load(sys.stdin)["failed"] != 0)'
 }
-step "perfbench: gate tests + one invoice_ingest run (expect \"failed\": 0)" \
+perfbench_gate() {
+  python -m pytest perfbench/test_gate.py -q || return 1
+  perfbench_run invoice_ingest || return 1
+  perfbench_run event_stream
+}
+step "perfbench: gate tests + one invoice_ingest and one event_stream run (expect \"failed\": 0)" \
   perfbench_gate
 
 step "codegen health (expect: codegen fallback lines: 0)" \

@@ -75,81 +75,15 @@ def reconcile(
         F.coalesce(F.sum(F.when(F.col("__n_res").isNull(), F.col("__n_src"))),
                    F.lit(0).cast("long")).alias("missing_pk_count"),
     )
-    return _report_select(report, *groups)
-
-
-def _report_select(report: DataFrame, *groups: str) -> DataFrame:
-    """Shared final projection of the reconciliation report."""
+    diff = F.abs(F.col("source_total") - F.col("result_total"))
+    no_loss = F.col("missing_pk_count") == 0
     return report.select(
         *groups,
         F.col("source_total").cast("double").alias("source_total"),
         F.col("result_total").cast("double").alias("result_total"),
-        F.abs(F.col("source_total") - F.col("result_total")).cast("double").alias("variance"),
-        F.col("missing_pk_count"),
-        (F.col("missing_pk_count") == 0).alias("no_data_loss"),
-        (F.abs(F.col("source_total") - F.col("result_total")) <= 1).alias("amounts_match"),
-        ((F.col("missing_pk_count") == 0)
-         & (F.abs(F.col("source_total") - F.col("result_total")) <= 1)).alias("reconciled"),
+        diff.cast("double").alias("variance"),
+        "missing_pk_count",
+        no_loss.alias("no_data_loss"),
+        (diff <= 1).alias("amounts_match"),
+        (no_loss & (diff <= 1)).alias("reconciled"),
     )
-
-
-def reconcile_insert_only(
-    existing: DataFrame,
-    incoming: DataFrame,
-    keys: Sequence[str] = PK,
-    amount_col: str = "total_amount",
-    amount_type: str = DEC,
-) -> DataFrame:
-    """Fused J1+J3/J4 reconciliation: the same one-row report as
-    ``reconcile(incoming, upsert_insert_only(existing, incoming))``
-    computed from ONE tagged aggregation over the two inputs, instead
-    of evaluating the upsert union (which re-derives ``incoming`` and
-    ``existing`` a second time each) and then re-aggregating it.
-
-    Plan shape: 2 input scans → union → one keyed agg → global agg
-    (2 exchanges total) vs the composed form's 4 input subtree
-    evaluations, anti-join, and ~5 exchanges.
-
-    Algebra (exact for ANY input, duplicate PKs and NULL amounts
-    included — every step of both formulations is a groupBy or a
-    per-PK presence test, so there is no join fan-out to preserve):
-
-    - insert-only result rows for PK p are the existing rows when
-      ``n_e(p) > 0``, else the incoming rows (the anti-join keeps all
-      incoming duplicates of an absent PK);
-    - hence the per-PK result amount is ``S_e if n_e > 0 else S_i``
-      and the result PK set is ``{p : n_e > 0 or n_i > 0}``, a
-      superset of the source PK set — the J3 missing count is still
-      expressed literally below over the same per-PK frame;
-    - decimal sums are exact and associative, so regrouping the same
-      row multisets cannot move an ulp.
-
-    Pinned equal to the composed form on adversarial frames by
-    tests/test_validation_reconcile.py.
-    """
-    keys = list(keys)
-    amt = F.col(amount_col).cast(amount_type)
-    tagged = existing.select(
-        *keys, amt.alias("__amt"), F.lit(1).alias("__is_ex")
-    ).unionByName(
-        incoming.select(*keys, amt.alias("__amt"), F.lit(0).alias("__is_ex"))
-    )
-    ex = F.col("__is_ex") == 1
-    per_pk = tagged.groupBy(*keys).agg(
-        F.sum(F.when(~ex, F.col("__amt"))).alias("__s"),
-        F.count(F.when(~ex, F.lit(1))).alias("__n_src"),
-        F.sum(F.when(ex, F.col("__amt"))).alias("__se"),
-        F.count(F.when(ex, F.lit(1))).alias("__n_ex"),
-    )
-    src = F.col("__n_src") > 0
-    in_result = (F.col("__n_ex") > 0) | src
-    report = per_pk.agg(
-        F.coalesce(F.sum(F.when(src, F.col("__s"))),
-                   F.lit(0).cast(amount_type)).alias("source_total"),
-        F.coalesce(F.sum(F.when(src & (F.col("__n_ex") > 0), F.col("__se"))
-                          .when(src, F.col("__s"))),
-                   F.lit(0).cast(amount_type)).alias("result_total"),
-        F.coalesce(F.sum(F.when(src & ~in_result, F.col("__n_src"))),
-                   F.lit(0).cast("long")).alias("missing_pk_count"),
-    )
-    return _report_select(report)

@@ -41,14 +41,6 @@ def upsert_insert_only(
     return existing.unionByName(new_rows.select(*existing.columns))
 
 
-def new_rows_only(
-    existing: DataFrame, incoming: DataFrame, keys: Sequence[str] = PK
-) -> DataFrame:
-    """The inserted delta of J1 (for counters / append-only sinks)."""
-    keys = list(keys)
-    return incoming.join(existing.select(*keys).distinct(), on=keys, how="left_anti")
-
-
 def upsert_full(
     existing: DataFrame,
     incoming: DataFrame,

@@ -35,14 +35,13 @@ from pyspark.sql import functions as F
 
 from smartbots_etl_facturas_spark.operators.ordered import dedup_first_wins
 from smartbots_etl_facturas_spark.operators.reconcile import reconcile
+from smartbots_etl_facturas_spark.operators.upsert import PK
 from smartbots_etl_facturas_spark.operators.validation import split_valid, with_validation
 from smartbots_etl_facturas_spark.plans.extract import extract_invoice_files
 from smartbots_etl_facturas_spark.sinks.audit import AuditWriter
 from smartbots_etl_facturas_spark.sinks.staged import current_version, publish, read_published
 from smartbots_etl_facturas_spark.sources.readers import validate_schema
 from smartbots_etl_facturas_spark.sources.xlsx import read_xlsx_grid_distributed
-
-PK = ["invoice_number", "reference_number"]
 
 EXPECTED_COLUMNS = ["row_idx", "invoice_number", "reference_number", "carrier_name",
                     "net_amount", "tax_amount", "total_amount"]
@@ -91,7 +90,8 @@ def consolidate_inbox(
                    if n.endswith(".xlsx") and not n.startswith((".", "_")))
     files: list[tuple[str, str, DataFrame | Exception]] = []
     if names:
-        grid = read_xlsx_grid_distributed(spark, os.path.join(inbox_dir, "*.xlsx"), GRID_COLS)
+        paths = [os.path.join(inbox_dir, n) for n in names]
+        grid = read_xlsx_grid_distributed(spark, paths, GRID_COLS)
         grid = grid.withColumn("source_file", F.element_at(F.split("source_file", "/"), -1))
         valid, errors = extract_invoice_files(grid)
         unreadable = dict(errors.filter(F.col("row_idx") < 0).select("source_file", "error").collect())

@@ -40,13 +40,9 @@ def get_spark(app_name: str = "smartbots-etl-facturas-spark",
         # tables are single ~100 MB files, which would otherwise scan
         # as 1-3 tasks and leave local[32] idle. 8 MB splits give the
         # scan ~2-4 tasks per core here; on a real cluster reading
-        # 100 TB the file count already saturates executors and this
-        # knob should be raised back toward 128 MB via
-        # SPARK_GRAFT_MAX_PARTITION_BYTES.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(8 * 1024 * 1024)),
-        )
+        # 100 TB the file count already saturates executors and the
+        # split size belongs back near 128 MB.
+        .config("spark.sql.files.maxPartitionBytes", str(8 * 1024 * 1024))
         # Eagerly-checkpointed operators (graph rounds, skew loops,
         # curation snapshots) leave their blocks pinned until the
         # ContextCleaner sees the RDD collected by a JVM GC; the
@@ -55,23 +51,10 @@ def get_spark(app_name: str = "smartbots-etl-facturas-spark",
         # accumulate in the block manager and randomly tax later
         # queries with memory pressure (measured: multi-second
         # per-query inflation late in a 225-query run, all clearing on
-        # quiet reprobe). 2min keeps long sessions clean; tune with
-        # SPARK_GRAFT_PERIODIC_GC on clusters where full GCs are
-        # costlier than the reclaimed headroom.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "2min"),
-        )
+        # quiet reprobe). 2min keeps long sessions clean; a cluster
+        # where full GCs cost more than the reclaimed headroom wants a
+        # longer interval.
+        .config("spark.cleaner.periodicGC.interval", "2min")
     )
     return builder.getOrCreate()
 
-
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLES):
-    """Load the driver's parquet tables as a dict of DataFrames."""
-    return {name: spark.read.parquet(f"{sf_dir}/{name}.parquet") for name in names}

@@ -1,4 +1,4 @@
-"""S1/S2/S4 — reading with the explicit row-order invariant.
+"""S1/S2 — reading with the explicit row-order invariant.
 
 Spark has no implicit row order, so order-sensitive operators (P8
 take-while, U4 first-wins dedup, S8 append position) need an explicit
@@ -22,60 +22,6 @@ def with_row_idx(df: DataFrame, order_cols: list[str], idx_name: str = "row_idx"
     """
     w = Window.orderBy(*[F.col(c) for c in order_cols])
     return df.withColumn(idx_name, F.row_number().over(w) - 1)
-
-
-def read_parquet_table(spark, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def discover_header(
-    raw: DataFrame,
-    known_headers,
-    idx_col: str = "row_idx",
-    max_scan: int = 15,
-    min_hits: int = 3,
-    fallback_idx: int = 10,
-) -> DataFrame:
-    """S4 header-row discovery (official_format_extractor.py:372-407).
-
-    Scans the first ``max_scan`` raw rows for one whose cells contain
-    ≥ ``min_hits`` known header names; rows after it are re-headered
-    with that row's cell values. Falls back to the reference's
-    "skip 10 rows, row 11 is header" rule (:402-405) when no row
-    qualifies.
-
-    The two driver-side ``collect()`` calls fetch ≤ 1 tiny row each —
-    header position/names are *schema metadata*, not data; the data
-    rows themselves never leave the cluster.
-    """
-    known_upper = [h.upper() for h in known_headers]
-    cell_cols = [c for c in raw.columns if c != idx_col]
-    hits = None
-    for c in cell_cols:
-        h = F.when(F.upper(F.trim(F.col(c))).isin(known_upper), 1).otherwise(0)
-        hits = h if hits is None else hits + h
-    found = (
-        raw.filter(F.col(idx_col) < max_scan)
-        .filter(hits >= min_hits)
-        .agg(F.min(idx_col).alias("__hdr"))
-        .collect()[0]["__hdr"]
-    )
-    header_idx = fallback_idx if found is None else found
-    hdr_rows = raw.filter(F.col(idx_col) == header_idx).collect()
-    mapping = {
-        c: (str(hdr_rows[0][c]) if hdr_rows and hdr_rows[0][c] is not None else c)
-        for c in cell_cols
-    }
-    return raw.filter(F.col(idx_col) > header_idx).select(
-        idx_col, *[F.col(c).alias(mapping[c]) for c in cell_cols]
-    )
-
-
-def attach_fixed_cells(detail: DataFrame, fixed: DataFrame) -> DataFrame:
-    """S3 fixed-cell scan (official_format_extractor.py:455-476):
-    scalar header cells become literal columns on every detail row —
-    a broadcast cross join of a 1-row frame (no shuffle of detail)."""
-    return detail.crossJoin(F.broadcast(fixed))
 
 
 class SchemaValidationError(ValueError):

@@ -192,7 +192,7 @@ def grid_rows(content: bytes, sheet_name=0) -> list[tuple[int, list]]:
 
 def read_xlsx_grid_distributed(
     spark,
-    path: str,
+    path: str | list[str],
     n_cols: int,
     sheet_name=0,
 ) -> DataFrame:
@@ -203,6 +203,10 @@ def read_xlsx_grid_distributed(
     DISCOVERY and format DETECTION happen downstream as set-based
     dataflow (``extract_invoice_files``), so many files with different
     layouts go through ONE plan with no driver-side per-file loop.
+
+    ``path`` is a directory, a glob or a list of files. A list skips
+    the metadata-directory probe Spark makes for a glob (one failed
+    lookup and a logged stack trace per read).
 
     ``n_cols`` pads/truncates every sheet to a fixed grid width (the
     static schema Spark needs); size it to the widest expected layout.

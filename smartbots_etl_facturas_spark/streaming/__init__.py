@@ -1,8 +1,7 @@
 from smartbots_etl_facturas_spark.streaming.windows import (
-    nanos_to_timestamp,
     tumbling_agg,
     sliding_agg,
 )
 from smartbots_etl_facturas_spark.streaming.ingest import incremental_file_stream
 
-__all__ = ["nanos_to_timestamp", "tumbling_agg", "sliding_agg", "incremental_file_stream"]
+__all__ = ["tumbling_agg", "sliding_agg", "incremental_file_stream"]

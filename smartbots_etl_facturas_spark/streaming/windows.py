@@ -10,23 +10,8 @@ streaming DataFrames (Spark's unified semantics).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def nanos_to_timestamp(col: Column) -> Column:
-    """Events testdata carries nanos-since-epoch longs (see
-    __spark_entry__.read_events); convert to a proper timestamp.
-
-    Pure-DSL exact ns -> us: epoch nanos (~1.7e18) exceed the 2^53
-    double mantissa, so plain ``col / 1000`` would corrupt low bits;
-    the decimal(38,0) division is exact and the long cast truncates
-    toward zero exactly like integral ``div`` (round-11 review: the
-    previous ``F.expr(col._jc.toString())`` round-trip broke under
-    Spark Connect and for names needing quoting)."""
-    return F.timestamp_micros(
-        (col.cast("decimal(38,0)") / F.lit(1000)).cast("long")
-    )
 
 
 def tumbling_agg(

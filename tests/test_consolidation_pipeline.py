@@ -446,3 +446,28 @@ def test_corrupt_workbook_fails_alone(spark, tmp_path, perfbench_workloads):
     counts = dict(((f, a), c) for f, a, c in log.groupBy("file_name", "action").count().collect())
     assert {n: [counts.get((n, "INSERT"), 0), counts.get((n, "VALIDATION_ERROR"), 0)]
             for n in good} == truth["per_file"]
+
+
+def test_inbox_skips_hidden_and_temp_files(spark, env, tmp_path):
+    """An editor's lock file (``.~lock.xlsx``) and a half-copied temp
+    file (``_tmp.xlsx``) in the inbox hold corrupt bytes: the round
+    reads only the two real workbooks and succeeds."""
+    from smartbots_etl_facturas_spark.sources.xlsx import write_xlsx
+
+    audit, base = env
+    inbox = tmp_path / "inbox"
+    inbox.mkdir()
+    header = ["N° Factura", "N° Referencia", "Transportista",
+              "Monto Neto", "IVA", "Monto Total", "Fecha Factura"]
+    for name, inv in (("a.xlsx", "F-A"), ("b.xlsx", "F-B")):
+        grid = [[None] * 7 for _ in range(10)]
+        grid += [header, [inv, "R-1", "Car", "100", "19", "119", "2026-02-15"]]
+        write_xlsx(str(inbox / name), {"Hoja1": grid})
+    for name in ("_tmp.xlsx", ".~lock.xlsx"):
+        (inbox / name).write_bytes(b"PK\x03\x04 not a workbook")
+
+    report = consolidate_inbox(spark, str(inbox), base, audit)
+    assert report.status == "SUCCESS"
+    assert (report.files_ok, report.files_error, report.inserted) == (2, 0, 2)
+    assert sorted((r.file_name, r.status) for r in audit.table("file_log").collect()) == [
+        ("a.xlsx", "COMPLETED"), ("b.xlsx", "COMPLETED")]

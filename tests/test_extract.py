@@ -95,6 +95,29 @@ def test_simple_detection_and_extraction(spark):
     assert "date" in errs[14]
 
 
+def test_simple_header_discovered_above_fallback_row(spark):
+    """S4 away from the fallback row: a simple sheet whose header sits
+    at row 4 extracts rows 5+ (with the fallback header at row 10 it
+    would extract nothing). It stops at row 6: a carrier at row 7 too
+    would fill both C6 and C8 and make the sheet MIXED."""
+    blank = (None,) * 7
+    rows = [
+        (0, "Reporte Mensual", *blank[1:]),
+        (1, *blank),
+        (2, "Empresa:", "ACME Logistics", *blank[2:]),
+        (3, *blank),
+        (4, "N° Factura", "N° Referencia", "Transportista", "Monto Neto",
+         "IVA", "Monto Total", "Fecha Factura"),
+        (5, "F-20", "R-1", "CarA", "100", "19", "119", "2026-02-15"),
+        (6, "F-21", "R-2", "CarB", "200", "38", "238", "16/02/2026"),
+    ]
+    valid, errors = _extract_one(spark.createDataFrame(rows, SIMPLE_SCHEMA), "h4.xlsx")
+    got = sorted((r.row_idx, r.invoice_number, r.carrier_name, float(r.total_amount))
+                 for r in valid.collect())
+    assert got == [(5, "F-20", "CarA", 119.0), (6, "F-21", "CarB", 238.0)]
+    assert errors.count() == 0
+
+
 def test_simple_sheet_missing_invoice_column(spark):
     """No recognizable header → discovery falls back to row 11; a grid
     whose fallback header lacks 'N° Factura' yields empty outputs, not

@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from smartbots_etl_facturas_spark.operators.upsert import (
     audit_actions,
-    new_rows_only,
     upsert_full,
     upsert_insert_only,
 )
@@ -27,12 +26,6 @@ def test_insert_only_existing_wins(spark):
     assert rows[("F1", "R1")].carrier_name == "OldCarrier"
     assert rows[("F1", "R1")].total_amount == 100.0
     assert rows[("F2", "R2")].carrier_name == "C2"
-
-
-def test_new_rows_only_counts(spark):
-    existing = _df(spark, [("F1", "R1", "A", 1.0)])
-    incoming = _df(spark, [("F1", "R1", "B", 2.0), ("F2", "R2", "C", 3.0), ("F3", "R3", "D", 4.0)])
-    assert new_rows_only(existing, incoming).count() == 2
 
 
 def test_full_upsert_statuses(spark):

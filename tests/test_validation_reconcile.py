@@ -8,9 +8,11 @@ Boundary proofs mirrored from the reference:
   (consolidate_invoices.py:570-572)
 """
 
+import duckdb
 from pyspark.sql import functions as F
 
 from smartbots_etl_facturas_spark.operators.reconcile import reconcile
+from smartbots_etl_facturas_spark.operators.upsert import upsert_insert_only
 from smartbots_etl_facturas_spark.operators.validation import split_valid, with_validation
 
 SCHEMA = ("invoice_number string, reference_number string, carrier_name string, "
@@ -61,44 +63,48 @@ def test_reconcile_pass_and_exclusive_tolerance(spark):
     assert rep.result_total == 299.0
 
 
-def test_reconcile_insert_only_fusion_equals_composed_form(spark):
-    """Round-14 fusion proof: reconcile_insert_only(existing, incoming)
-    must equal reconcile(incoming, upsert_insert_only(existing,
-    incoming)) row-for-row on adversarial inputs — duplicate PKs on
-    BOTH sides (the driver's lineitem has ~24% dup (orderkey,
-    linenumber) pairs), NULL amounts, existing-only / incoming-only /
-    overlapping PKs, and each side empty."""
-    from smartbots_etl_facturas_spark.operators.reconcile import (
-        reconcile_insert_only,
-    )
-    from smartbots_etl_facturas_spark.operators.upsert import (
-        upsert_insert_only,
-    )
+def _reconcile_oracle(existing_rows, incoming_rows):
+    """The ``reconciliation`` registry oracle (``SQL_RECONCILIATION``)
+    run by DuckDB over two literal ``existing``/``incoming`` tables in
+    place of its lineitem-derived CTEs."""
+    from __spark_entry__ import SQL_RECONCILIATION
 
+    con = duckdb.connect()
+    for name, rows in (("existing", existing_rows), ("incoming", incoming_rows)):
+        con.execute(f"CREATE TABLE {name} (invoice_number VARCHAR, "
+                    "reference_number VARCHAR, total_amount DOUBLE)")
+        if rows:
+            con.executemany(f"INSERT INTO {name} VALUES (?, ?, ?)", rows)
+    body = SQL_RECONCILIATION[SQL_RECONCILIATION.index("result AS ("):]
+    return con.execute("WITH " + body).fetchall()
+
+
+def test_reconcile_of_insert_only_upsert_matches_duckdb(spark):
+    """reconcile(incoming, upsert_insert_only(existing, incoming)) —
+    the ``reconciliation`` query's form — equals its DuckDB oracle on
+    duplicate PKs on both sides (the lineitem testdata has ~24% dup
+    (orderkey, linenumber) pairs), NULL amounts, existing-only,
+    incoming-only and overlapping PKs, and each side empty."""
     schema = "invoice_number string, reference_number string, total_amount double"
-    existing = spark.createDataFrame(
-        [("F1", "R1", 100.0), ("F1", "R1", 50.0),   # dup PK in existing
-         ("F2", "R2", 200.0),
-         ("F5", "R5", None),                         # NULL amount
-         ("F6", "R6", 66.0)],                        # existing-only
-        schema)
-    incoming = spark.createDataFrame(
-        [("F1", "R1", 101.0),                        # overlaps (existing wins)
-         ("F3", "R3", 300.0), ("F3", "R3", 301.0),   # dup PK, new
-         ("F4", "R4", None),                         # NULL amount, new
-         ("F5", "R5", 55.0)],                        # overlaps a NULL-amount PK
-        schema)
+    existing = [("F1", "R1", 100.0), ("F1", "R1", 50.0),   # dup PK in existing
+                ("F2", "R2", 200.0),
+                ("F5", "R5", None),                         # NULL amount
+                ("F6", "R6", 66.0)]                         # existing-only
+    incoming = [("F1", "R1", 101.0),                        # overlaps (existing wins)
+                ("F3", "R3", 300.0), ("F3", "R3", 301.0),   # dup PK, new
+                ("F4", "R4", None),                         # NULL amount, new
+                ("F5", "R5", 55.0)]                         # overlaps a NULL-amount PK
 
-    def rows(df):
-        return sorted(df.collect(), key=str)
-
-    for src, ex in [(incoming, existing),
-                    (incoming, existing.limit(0)),
-                    (incoming.limit(0), existing)]:
-        composed = reconcile(src, upsert_insert_only(ex, src))
-        fused = reconcile_insert_only(ex, src)
-        assert fused.schema == composed.schema
-        assert rows(fused) == rows(composed)
+    reports = []
+    for ex, src in [(existing, incoming), ([], incoming), (existing, [])]:
+        ex_df, src_df = (spark.createDataFrame(rows, schema) for rows in (ex, src))
+        got = [tuple(r) for r in reconcile(src_df, upsert_insert_only(ex_df, src_df),
+                                           amount_type="decimal(27,6)").collect()]
+        assert got == _reconcile_oracle(ex, src), (len(ex), len(src))
+        reports.append(got)
+    # existing wins F1 (150 for 101) and F5 (NULL for 55): 757 vs 751
+    assert reports[0] == [(757.0, 751.0, 6.0, 0, True, False, False)]
+    assert reports[2] == [(0.0, 0.0, 0.0, 0, True, True, True)]
 
 
 def test_reconcile_by_equals_per_group_calls(spark):
